@@ -1083,7 +1083,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # if r12 attestation differs: staleness sort over
     # CORRECTNESS_r0*.json + CORRECTNESS_r1*.json (green rows only).
     assert len(priority) == 50 and all(name in q for name in priority)
-    rows_only = [name for name in q if name not in oracle_sql()]
+    oracles = oracle_sql()
+    rows_only = [name for name in q if name not in oracles]
     rest = [n for n in q if n not in priority]
     return {
         **{name: q[name] for name in priority},

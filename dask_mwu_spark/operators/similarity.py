@@ -805,8 +805,15 @@ def semantic_dup_pairs(
     x = idx.withColumn(
         "_pj", F.explode(F.array(*[F.lit(j) for j in range(n_blocks)]))
     ).repartition(par, *salted_keys)
+    # the block hash is salted apart from _sub's: with the same hash, a
+    # sub-bucket's rows share md5 mod n_sub and, when gcd(n_sub,
+    # n_blocks) > 1, would all land in one block
     y = idx.withColumn(
-        "_pj", F.pmod(md5_long(F.col("vec_id").cast("string")), F.lit(n_blocks))
+        "_pj",
+        F.pmod(
+            md5_long(F.concat(F.col("vec_id").cast("string"), F.lit("#pj"))),
+            F.lit(n_blocks),
+        ),
     ).repartition(par, *salted_keys)
     pairs = (
         x.alias("x")
@@ -1581,11 +1588,16 @@ def _round6(x: float) -> float:
     BigDecimal.valueOf(x) parses Double.toString's shortest round-trip
     decimal (== Python ``repr``'s value), then HALF_UP at scale 6.
     BigDecimal carries no signed zero, so any zero result comes back
-    +0.0 (round(-0.0, 6) == 0.0 on the engine).  Pinned against the
-    engine by test_r13_ops and by the trainer oracle battery (exact
-    equality at 3 SFs)."""
+    +0.0 (round(-0.0, 6) == 0.0 on the engine).  NaN, +-Inf and every
+    |x| >= 2**52 come back unchanged, as on the engine: doubles that
+    large are integers, so the rounding is the identity (and Decimal's
+    28-digit context cannot quantize them at scale 6 from 1e22 up).
+    Pinned against the engine by test_r13_ops and by the trainer oracle
+    battery (exact equality at 3 SFs)."""
     from decimal import ROUND_HALF_UP, Decimal
 
+    if not abs(x) < 2.0**52:  # also true for NaN
+        return x
     out = float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
     return 0.0 if out == 0.0 else out
 

@@ -1767,7 +1767,6 @@ def bpe_train_merges(
     *,
     n_merges: int = 8,
     max_vocab: int | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Learned byte-pair-encoding merge table (Sennrich, Haddow & Birch,
     ACL 2016, Algorithm 1): (merge_rank, lhs, rhs, pair_count) — the
@@ -1792,65 +1791,33 @@ def bpe_train_merges(
       ``aaa a``) — the same single-pass semantics as subword-nmt's
       ``replace_pair``.
 
-    Scale design — the classic BPE trick is that after one corpus scan the
-    working set is the WORD-FREQUENCY table (vocabulary-sized, corpus-size
+    Scale design — the classic BPE trick (what subword-nmt itself does
+    after its counting pass) is that after one corpus scan the working
+    set is the WORD-FREQUENCY table (vocabulary-sized, corpus-size
     independent), and every round runs on it:
-    - one tokenize scan -> groupBy(word) builds (word, freq); each round
-      is then (a) a scan-stage zip-shift pair explode + map-side-combinable
-      groupBy on the (lhs, rhs) key — bounded by distinct pairs, uniform
-      by construction, (b) a 1-row TakeOrderedAndProject argmax (never a
-      global sort, never a driver collect), (c) a broadcast of that 1-row
-      winner cross-joined back so the re-segmentation fold runs as pure
-      codegen over the symbol arrays.  No driver-side data loop: the merge
-      table itself is built as a union of the per-round 1-row DataFrames.
-    - the greedy merge is an ordered ``aggregate`` fold per word —
-      per-row expression work, deterministic under any partitioning.
-    - FIXED ``n_merges`` rounds (the ``graph.pagerank`` discipline); the
-      vocab table is referenced twice per round (stats + re-segmentation),
-      so each round ``localCheckpoint``s it — eager, vocabulary-bounded,
-      and it truncates the doubly-referenced lineage that would otherwise
-      go exponential in the optimizer (see pagerank's notes).
+    - ONE distributed tokenize scan -> groupBy(word) builds (word, freq);
+      that bounded table is collected once and the pinned sequential
+      loop (:func:`_bpe_sequential`) runs every merge round driver-side,
+      so wall grows with merges and vocabulary, never with the corpus,
+      and no round submits a Spark job (production BPE learns 32k-100k
+      merges).  The results come back as DataFrames.
     - ``max_vocab``: at real corpus scale (100M+ distinct tokens) cap the
       training table to the top ``max_vocab`` words by (freq desc, word
       asc) — a bounded TakeOrderedAndProject, the standard
       sample-bounded-training knob (same contract as the DSIR/Lloyd
-      trainers).  Default None trains exactly; the registered query uses
-      the exact path so the oracle is exact.
-    - Large-``n_merges`` regime (production BPE learns 32k-100k merges):
-      each distributed round is one small Spark job over the
-      vocabulary-bounded table, so wall-clock is dominated by per-round
-      scheduling, not data.  The corpus-scale work is the ONE tokenize
-      scan that builds the word-frequency table; past a few hundred
-      merges the standard move (what subword-nmt itself does after its
-      counting pass) is to collect that bounded table and run the merge
-      loop single-node — ``engine="local"`` (or ``"auto"``, which
-      switches past ``BPE_LOCAL_ROUNDS`` rounds) does exactly that:
-      collect the ``max_vocab``-capped (word, freq) table (bounded by
-      contract — set ``max_vocab`` at corpus scale) and run the pinned
-      sequential loop (``_bpe_sequential``) driver-side, returning the
-      SAME schema and, by the pinned semantics, the SAME merges
-      (equivalence pytest at n_merges=64 on the real corpus;
-      ``tools/scale_probe_bpe_local.py`` shows local wall grows with
-      merges, not corpus, and drops the distributed regime's n_merges
-      driver round-trips — VERDICT r8 item 3).  ``engine=
-      "distributed"`` keeps every round on the cluster so the learned
-      table is exactly oracle-checkable end to end; the registered
-      query uses it (n_merges=8 < the auto threshold).
+      trainers).  ``max_vocab=None`` trains on every distinct word and
+      warns (a ``UserWarning`` naming ``max_vocab``): the driver collect
+      is unbounded at corpus scale.  The registered queries cap at 1e6,
+      a no-op on the test corpora, so the oracle stays exact.
 
     Cross-engine: the DuckDB twin re-implements the merge POSITIONALLY
     (gaps-and-islands parity over matching positions) rather than as a
-    fold — an independent formulation of the same greedy-non-overlap
+    loop — an independent formulation of the same greedy-non-overlap
     semantics, unrolled per round like the PageRank MATERIALIZED-CTE
     oracle.  All counts are integers; no float folds anywhere.
     No counterpart in the reference (SURVEY.md section 2.1).
     """
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if _bpe_resolve_engine(engine, n_merges, max_vocab) == "local":
-        merges, _vocab = _bpe_train_collected(docs, n_merges, max_vocab)
-        return merges
-    merges, _vocab = _bpe_train(_bpe_word_freq(docs, max_vocab), n_merges)
-    return merges
+    return _bpe_train_collected(docs, n_merges, max_vocab)[0]
 
 
 def _bpe_word_freq(docs: DataFrame, max_vocab: int | None) -> DataFrame:
@@ -1875,22 +1842,14 @@ def _bpe_word_freq(docs: DataFrame, max_vocab: int | None) -> DataFrame:
     return word_freq
 
 
-def _bpe_init_syms():
-    """Initial segmentation of ``word``: its characters plus the SEPARATE
-    end-of-word symbol (the paper's Algorithm 1 presentation) — ONE
-    expression shared by the trainer and the injected-merges apply path
-    so initialization cannot drift (the review-r8 discipline)."""
-    return F.concat(F.split("word", ""), F.array(F.lit(BPE_EOW)))
-
-
 def _bpe_merge_fold(syms, lhs, rhs):
     """Greedy left-to-right application of ONE merge (lhs, rhs) to a
-    symbol array as an ordered ``aggregate`` fold — the trainer's exact
-    expression, factored out so the ``merges=`` injection path applies
-    merges with the IDENTICAL fold.  The freshly merged symbol is never
-    re-merged: it would have to equal ``lhs`` again, but lhs+rhs != lhs
-    since rhs is non-empty — so the fold agrees with the sequential
-    skip-two-symbols loop by construction."""
+    symbol array as an ordered ``aggregate`` fold — the engine-side
+    apply step of the ``merges=`` injection path.  The freshly merged
+    symbol is never re-merged: it would have to equal ``lhs`` again, but
+    lhs+rhs != lhs since rhs is non-empty — so the fold agrees with the
+    trainer's skip-two-symbols loop (:func:`_bpe_sequential`) by
+    construction."""
     return F.aggregate(
         syms,
         F.array().cast("array<string>"),
@@ -1906,155 +1865,20 @@ def _bpe_merge_fold(syms, lhs, rhs):
     )
 
 
-# per-round-recheckpoint cadence for the distributed BPE loop: the merge
-# fold is cheap expression work over the vocabulary-bounded table, so a few
-# rounds can chain lazily between materializations (each round's pair-count
-# action re-evaluates at most BPE_CKPT_EVERY-1 earlier folds), trading a
-# bounded recompute for BPE_CKPT_EVERY-1 fewer eager checkpoint jobs per
-# block — the pagerank every-4-rounds discipline applied here (r12).
-BPE_CKPT_EVERY = 4
-
-
-def _bpe_train(
-    word_freq: DataFrame, n_merges: int
-) -> tuple[DataFrame, DataFrame]:
-    """Shared BPE training loop over a (word, freq) table: returns
-    (merge_table, final_vocab) where final_vocab is (word, syms, freq)
-    with ``syms`` the word's segmentation AFTER all ``n_merges`` merges.
-    See :func:`bpe_train_merges` for the algorithm/scale contract.
-
-    Job-count shape (optimization r12): each round is ONE Spark job —
-    the (pair_count desc, lhs, rhs) argmax is a TakeOrderedAndProject
-    whose single winning row is collected (the bounded-collect
-    contract: 1 row per round, the same bound the ``engine="local"``
-    path collects wholesale), and the winner is folded back into the
-    vocabulary as PLAIN LITERALS.  The previous shape spent three jobs
-    per round (eager 1-row checkpoint + isEmpty probe + eager vocab
-    re-checkpoint after a broadcast cross join): measured at sf0.1 the
-    8-round trainer dropped ~7.3s -> ~3s isolated.  The vocabulary
-    re-checkpoints every ``BPE_CKPT_EVERY`` rounds instead of every
-    round — with the winner inlined as literals the vocab is referenced
-    ONCE per round, so lineage grows linearly (no 2^n sharing blowup)
-    and the only cost of chaining is re-evaluating <= 3 cheap merge
-    folds inside the next pair-count job."""
-    spark = word_freq.sparkSession
-    vocab = word_freq.select(
-        "word", _bpe_init_syms().alias("syms"), "freq"
-    ).localCheckpoint()
-
-    rows: list[tuple[int, str, str, int]] = []
-    for r in range(n_merges):
-        n = F.size("syms")
-        pairs = vocab.select(
-            "freq",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("syms", F.lit(1), n - 1).alias("lhs"),
-                    F.slice("syms", F.lit(2), n - 1).alias("rhs"),
-                )
-            ).alias("pr"),
-        )
-        best = (
-            pairs.groupBy(
-                F.col("pr.lhs").alias("lhs"), F.col("pr.rhs").alias("rhs")
-            )
-            .agg(F.sum("freq").alias("pair_count"))
-            .orderBy(
-                F.col("pair_count").desc(),
-                F.col("lhs").asc(),
-                F.col("rhs").asc(),
-            )
-            .limit(1)
-            .collect()  # bounded: exactly 0 or 1 row per round
-        )
-        if not best:
-            # pairs exhausted before n_merges rounds (tiny vocab / huge
-            # n_merges): every word is one symbol, nothing left to merge.
-            # STOP — the merge table simply has fewer rows; the oracle
-            # agrees because its per-round merge is a LEFT join that
-            # no-ops on an empty b{r} (review r8).
-            break
-        b = best[0]
-        rows.append((r, b["lhs"], b["rhs"], int(b["pair_count"])))
-        merged = _bpe_merge_fold("syms", F.lit(b["lhs"]), F.lit(b["rhs"]))
-        vocab = vocab.select("word", merged.alias("syms"), "freq")
-        if (r + 1) % BPE_CKPT_EVERY == 0 and r + 1 < n_merges:
-            vocab = vocab.localCheckpoint()
-
-    merges = spark.createDataFrame(rows, _BPE_MERGE_SCHEMA)
-    return merges, vocab
-
-
-# past this many merge rounds, engine="auto" switches from the
-# per-round-Spark-job loop to the collected single-node loop (the
-# docstring's "a few hundred merges" — at 256 rounds the distributed
-# path is pure scheduling overhead: ~0.3-0.5s/round of job launch for
-# a vocabulary-bounded table that fits in driver memory by contract)
-BPE_LOCAL_ROUNDS = 256
-
-_BPE_MERGE_SCHEMA = "merge_rank long, lhs string, rhs string, pair_count long"
-
-
-def _bpe_resolve_engine(
-    engine: str, n_merges: int, max_vocab: int | None = 0
-) -> str:
-    """Resolve ``engine='auto'`` and ENFORCE the bounded-collect contract
-    (VERDICT r9 item 2 / ADVICE r9): the local path collects the
-    ``max_vocab``-capped (word, freq) table to the driver, so an
-    UNCAPPED table must never reach it silently.
-
-    - ``engine='auto'`` resolving to local with ``max_vocab=None`` is a
-      hard error: the caller never opted into a driver collect, and at
-      real corpus scale (100M+ distinct tokens) it is a driver OOM.
-    - explicit ``engine='local'`` with ``max_vocab=None`` is an explicit
-      opt-in, but still warns loudly — small-corpus tests and probes
-      stay usable while production callers get told to cap.
-
-    ``max_vocab`` defaults to 0 (a bounded sentinel) so the two pure
-    threshold assertions in the test suite keep working unchanged."""
-    if engine not in ("auto", "distributed", "local"):
-        raise ValueError(
-            f"engine must be 'auto', 'distributed' or 'local', got {engine!r}"
-        )
-    resolved = (
-        ("local" if n_merges > BPE_LOCAL_ROUNDS else "distributed")
-        if engine == "auto"
-        else engine
-    )
-    if resolved == "local" and max_vocab is None:
-        if engine == "auto":
-            raise ValueError(
-                f"engine='auto' resolves to the single-node BPE loop at "
-                f"n_merges={n_merges} > {BPE_LOCAL_ROUNDS}, which collects "
-                "the distinct-word table to the driver; set max_vocab to "
-                "bound the collect, or pass engine='distributed'/'local' "
-                "explicitly"
-            )
-        warnings.warn(
-            "engine='local' with max_vocab=None collects the FULL "
-            "distinct-word table to the driver — unbounded at corpus "
-            "scale; set max_vocab to bound the collect",
-            stacklevel=3,
-        )
-    return resolved
-
-
 def _bpe_sequential(
     word_freq: list[tuple[str, int]], n_merges: int
 ) -> tuple[list[tuple[int, str, str, int]], list[tuple[str, list[str], int]]]:
     """The pinned sequential form of Sennrich Algorithm 1 over a collected
-    (word, freq) list — the single-node merge loop for the
-    large-``n_merges`` regime.  Semantics are IDENTICAL to the
-    distributed ``_bpe_train`` by construction: pair statistics count
-    every adjacent position (overlaps included) weighted by word
-    frequency; the round winner is (pair_count desc, lhs asc, rhs asc)
-    (Python tuple-min on (-count, lhs, rhs) — str comparison is by code
-    point, which equals Spark's binary UTF-8 string order since UTF-8
-    preserves code-point order); the merge applies greedily
-    left-to-right without re-examining the freshly merged symbol (the
-    merged symbol lhs+rhs can never equal lhs — rhs is non-empty — so
-    the skip-two-symbols loop and the engine's ordered fold agree);
-    pair exhaustion breaks early exactly like the distributed loop.
+    (word, freq) list: pair statistics count every adjacent position
+    (overlaps included) weighted by word frequency; the round winner is
+    (pair_count desc, lhs asc, rhs asc) (Python tuple-min on (-count,
+    lhs, rhs) — str comparison is by code point, which equals Spark's
+    binary UTF-8 string order since UTF-8 preserves code-point order);
+    the merge applies greedily left-to-right without re-examining the
+    freshly merged symbol (the merged symbol lhs+rhs can never equal lhs
+    — rhs is non-empty — so this loop and the engine's ordered fold
+    :func:`_bpe_merge_fold` agree); pair exhaustion (every word one
+    symbol) stops early with a shorter merge table.
     Returns (merges, vocab) as plain Python: merges =
     [(merge_rank, lhs, rhs, pair_count)], vocab = [(word, syms, freq)].
     Cost: O(n_merges * total_symbols) over the vocabulary-bounded
@@ -2093,43 +1917,38 @@ def _bpe_sequential(
 def _bpe_train_collected(
     docs: DataFrame, n_merges: int, max_vocab: int | None
 ) -> tuple[DataFrame, DataFrame]:
-    """engine="local" twin of ``_bpe_train``: ONE distributed tokenize
-    scan builds the ``max_vocab``-capped (word, freq) table, which is
-    collected (bounded by contract) and trained via
-    :func:`_bpe_sequential`; results come back as DataFrames with the
-    exact distributed schemas.  No per-round Spark jobs and no per-round
-    ``isEmpty()`` driver actions — the n_merges driver round-trips of
-    the distributed regime collapse into one collect + one
-    createDataFrame pair (VERDICT r8 item 3)."""
+    """The BPE trainer behind every public entry point: ONE distributed
+    tokenize scan builds the ``max_vocab``-capped (word, freq) table,
+    which is collected and trained via :func:`_bpe_sequential`; returns
+    (merge_table, final_vocab) as DataFrames, final_vocab being
+    (word, syms, freq) with ``syms`` the word's segmentation AFTER every
+    learned merge.  Two Spark jobs per call (the word-count shuffle and
+    the collect), whatever ``n_merges`` is.
+
+    Bounded-collect contract (VERDICT r9 item 2): ``max_vocab=None``
+    collects the FULL distinct-word table, which is unbounded at corpus
+    scale, so it warns loudly; a cap is silent."""
+    if n_merges < 1:
+        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    if max_vocab is None:
+        warnings.warn(
+            "BPE training with max_vocab=None collects the FULL "
+            "distinct-word table to the driver — unbounded at corpus "
+            "scale; set max_vocab to bound the collect",
+            stacklevel=3,
+        )
     spark = docs.sparkSession
     rows = _bpe_word_freq(docs, max_vocab).collect()
     merges, segs = _bpe_sequential(
         [(r["word"], r["freq"]) for r in rows], n_merges
     )
-    merges_df = spark.createDataFrame(merges, schema=_BPE_MERGE_SCHEMA)
+    merges_df = spark.createDataFrame(
+        merges, schema="merge_rank long, lhs string, rhs string, pair_count long"
+    )
     vocab_df = spark.createDataFrame(
         segs, schema="word string, syms array<string>, freq long"
     )
     return merges_df, vocab_df
-
-
-def _bpe_segmented_vocab(
-    docs: DataFrame, n_merges: int, max_vocab: int | None, engine: str
-) -> DataFrame:
-    """Shared (word, syms, freq) final-vocabulary builder for the apply
-    twins — routes to the distributed or collected trainer, one place."""
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if _bpe_resolve_engine(engine, n_merges, max_vocab) == "local":
-        _merges, vocab = _bpe_train_collected(docs, n_merges, max_vocab)
-        return vocab
-    _merges, vocab = _bpe_train(_bpe_word_freq(docs, max_vocab), n_merges)
-    # the apply twins BRANCH over the final vocabulary (id assignment +
-    # dictionary join): materialize it once here so the branches read a
-    # cached table instead of both re-deriving the trailing merge folds
-    # (r12: without this the encode path re-optimized/re-ran the deep
-    # fold chain per branch — measured 10-35s erratic vs ~4s stable)
-    return vocab.localCheckpoint()
 
 
 def bpe_trained_vocab(
@@ -2137,18 +1956,17 @@ def bpe_trained_vocab(
     *,
     n_merges: int = 8,
     max_vocab: int | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Train BPE and return the final segmented vocabulary
     ``(word, syms array<string>, freq)`` — the table to PERSIST for the
     train-once/encode-many pipeline (VERDICT r9 item 3): write it out
     once, then feed it back as ``bpe_encode_ids(..., vocab=)`` so every
-    later encode batch skips the ``n_merges`` training rounds entirely.
-    Same arguments and engine routing as :func:`bpe_train_merges`;
+    later encode batch skips training entirely.
+    Same arguments and bound contract as :func:`bpe_train_merges`;
     injection equivalence is pinned by pytest (encode-with-injected
     tables is row-identical to encode-with-retrain).
     No counterpart in the reference (SURVEY.md section 2.1)."""
-    return _bpe_segmented_vocab(docs, n_merges, max_vocab, engine)
+    return _bpe_train_collected(docs, n_merges, max_vocab)[1]
 
 
 def _bpe_require_merge_table(merges: DataFrame) -> None:
@@ -2164,11 +1982,11 @@ def _bpe_vocab_from_merges(
     docs: DataFrame, merges: DataFrame, max_vocab: int | None
 ) -> DataFrame:
     """APPLY a previously learned merge table to ``docs``' word table —
-    the injected-merges twin of the trainer's per-round re-segmentation:
+    the injected-merges twin of the trainer's re-segmentation:
     (word, syms, freq) where ``syms`` is the greedy rank-order
-    application of every merge, via the trainer's own fold
-    (:func:`_bpe_merge_fold`), so the segmentation is bit-identical to
-    retraining by construction.
+    application of every merge via :func:`_bpe_merge_fold`, whose
+    semantics are the trainer's, so the segmentation equals retraining
+    (pinned by pytest).
 
     Scale shape: the merge table collapses to ONE array row (a grouped
     ``collect_list`` + ``array_sort`` on the n_merges-bounded table —
@@ -2193,7 +2011,7 @@ def _bpe_vocab_from_merges(
             "word",
             F.aggregate(
                 "bpe_merges_arr",
-                _bpe_init_syms(),
+                F.concat(F.split("word", ""), F.array(F.lit(BPE_EOW))),
                 lambda acc, m: _bpe_merge_fold(acc, m["lhs"], m["rhs"]),
             ).alias("syms"),
             "freq",
@@ -2206,7 +2024,6 @@ def bpe_segment_words(
     *,
     n_merges: int = 8,
     max_vocab: int | None = None,
-    engine: str = "auto",
     merges: DataFrame | None = None,
 ) -> DataFrame:
     """Apply the learned BPE merges back to the vocabulary — the second
@@ -2217,31 +2034,29 @@ def bpe_segment_words(
     corpus without ever re-walking document text (the same
     dictionary-encode-then-broadcast shape as ``tokenize_ids``).
 
-    Training and application share one loop (``_bpe_train``), so the
-    segmentation is BY CONSTRUCTION the greedy left-to-right application
-    of the learned merge sequence in rank order — no drift between the
-    trainer's internal state and a separate re-application pass (the
-    classic subword-nmt learn/apply mismatch class).  Same scale
-    contract as :func:`bpe_train_merges`: the working set after the one
-    tokenize scan is the vocabulary-bounded word table; the posexplode
-    output stays vocabulary-bounded (words x subwords-per-word).
+    The segmentation is the trainer's own final state
+    (:func:`_bpe_sequential` returns it), so it is BY CONSTRUCTION the
+    greedy left-to-right application of the learned merge sequence in
+    rank order — no drift between the trainer's internal state and a
+    separate re-application pass (the classic subword-nmt learn/apply
+    mismatch class).  Same scale and bound contract as
+    :func:`bpe_train_merges`: the working set after the one tokenize
+    scan is the vocabulary-bounded word table; the posexplode output
+    stays vocabulary-bounded (words x subwords-per-word).
     Deterministic: everything derives from the pinned trainer.
-    ``engine`` routes the training loop exactly as in
-    :func:`bpe_train_merges` (same merges either way — the apply twin
-    stays drift-free in both regimes).
 
     ``merges=`` (VERDICT r9 item 3) injects a PREVIOUSLY LEARNED merge
     table (the ``bpe_train_merges`` schema) instead of retraining —
-    the ``centroids=`` precedent from the IVF trainers; ``n_merges`` /
-    ``engine`` are ignored when given.  The injected path applies the
-    merges with the trainer's own fold (:func:`_bpe_vocab_from_merges`),
-    so segmentation is bit-identical to retraining — pinned by pytest.
+    the ``centroids=`` precedent from the IVF trainers; ``n_merges`` is
+    ignored when given.  The injected path applies the merges with the
+    engine-side fold (:func:`_bpe_vocab_from_merges`), so segmentation
+    equals retraining — pinned by pytest.
     No counterpart in the reference (SURVEY.md section 2.1).
     """
     if merges is not None:
         vocab = _bpe_vocab_from_merges(docs, merges, max_vocab)
     else:
-        vocab = _bpe_segmented_vocab(docs, n_merges, max_vocab, engine)
+        vocab = _bpe_train_collected(docs, n_merges, max_vocab)[1]
     return vocab.select(
         "word",
         F.posexplode("syms").alias("pos", "subword"),
@@ -2258,7 +2073,6 @@ def bpe_encode_ids(
     n_merges: int = 8,
     max_vocab: int | None = None,
     encode_docs: DataFrame | None = None,
-    engine: str = "auto",
     merges: DataFrame | None = None,
     vocab: DataFrame | None = None,
 ) -> DataFrame:
@@ -2280,11 +2094,12 @@ def bpe_encode_ids(
     vocabulary.  Words absent from the (possibly ``max_vocab``-capped)
     training vocabulary are dropped from the stream, as are empty
     tokens (both fall out of the inner dictionary join; the registered
-    query trains uncapped so only genuinely-unseen words drop).
+    query's 1e6 cap keeps every test-corpus word, so only
+    genuinely-unseen words drop).
 
     Scale shape — three bounded joins, zero corpus shuffles:
-    1. the trainer's one tokenize scan + vocabulary-bounded merge
-       rounds (:func:`bpe_train_merges`, either engine);
+    1. the trainer's one tokenize scan + driver-side merge rounds over
+       the vocabulary-bounded table (:func:`bpe_train_merges`);
     2. subword-id assignment: a groupBy over the vocabulary-bounded
        segmentation table, then a row_number over the SUBWORD vocabulary
        — bounded by |alphabet| + n_merges symbols (a BPE invariant: n
@@ -2308,12 +2123,12 @@ def bpe_encode_ids(
       which inherits its bound from the capped training run.
     - ``merges=`` injects a :func:`bpe_train_merges` table instead:
       ``docs``' word table is re-segmented by applying the merges with
-      the trainer's own fold (:func:`_bpe_vocab_from_merges`) — same
+      the engine-side fold (:func:`_bpe_vocab_from_merges`) — same
       result as retraining when ``docs`` is the training corpus, and
       the way to segment a NEW corpus's vocabulary under old merges.
     Injection equivalence (both seams row-identical to retrain) is
-    pinned by pytest; ``n_merges``/``engine`` are ignored when either
-    is given, and ``vocab=`` wins if both are.
+    pinned by pytest; ``n_merges`` is ignored when either is given,
+    and ``vocab=`` wins if both are.
     No counterpart in the reference (SURVEY.md section 2.1).
     """
     if vocab is not None:
@@ -2326,7 +2141,7 @@ def bpe_encode_ids(
         seg_vocab = vocab
     else:
         if max_vocab is None:
-            # Same bounded contract as the local trainer (VERDICT r9
+            # Same bounded contract as the trainer (VERDICT r9
             # item 2): the word -> subword dictionary below is BROADCAST,
             # so it must be vocabulary-bounded.  Uncapped is fine on a
             # bounded-vocab corpus (the registered query caps at 1e6, a
@@ -2342,7 +2157,7 @@ def bpe_encode_ids(
         if merges is not None:
             seg_vocab = _bpe_vocab_from_merges(docs, merges, max_vocab)
         else:
-            seg_vocab = _bpe_segmented_vocab(docs, n_merges, max_vocab, engine)
+            seg_vocab = _bpe_train_collected(docs, n_merges, max_vocab)[1]
     seg = seg_vocab.select(
         "word",
         F.posexplode("syms").alias("subword_pos", "subword"),
@@ -2474,7 +2289,7 @@ def maxmatch_segment_words(
     are skipped; at each live position a longest-first ``when`` chain
     probes the ``max_piece_len`` candidate lengths) — pure scan-stage
     codegen over the vocabulary table, no shuffle, no per-round driver
-    actions (contrast ``_bpe_train``'s n_merges rounds).  The collect is
+    actions and no iterative trainer.  The collect is
     the same bounded-state pattern as the IVF centroid literals; the
     ``array_contains`` probe is a linear scan of the literal, so this
     compiled form is sized for inventories up to a few thousand pieces
@@ -2998,7 +2813,7 @@ def _unigram_train(
     train-then-inject are identical by construction."""
     wf = _unigram_word_table(docs, max_vocab, max_word_len)
     # ONE corpus tokenize scan total: the vocabulary-bounded word table
-    # is eagerly checkpointed (the _bpe_train discipline) so the n_iter
+    # is eagerly checkpointed so the n_iter
     # Viterbi passes below re-read the tiny table, never the corpus
     wf = wf.localCheckpoint()
     inv = _substring_piece_counts(wf, max_pieces, max_piece_len).select(

@@ -639,7 +639,8 @@ def _bpe_merges_sql(
     merge.  The merge here is POSITIONAL — gaps-and-islands parity over
     matching positions (a run of consecutive matches merges at even
     offsets only, exactly what a single left-to-right pass does) — an
-    independent formulation of the engine's ordered ``aggregate`` fold.
+    independent formulation of the engine trainer's skip-two-symbols
+    loop (and of its ordered ``aggregate`` apply fold).
     AS MATERIALIZED on every per-round CTE: each v{r} is referenced by
     both the stats block and the merge block (the PageRank-oracle
     inline-per-reference blowup otherwise).  Integer counts only.
@@ -648,7 +649,7 @@ def _bpe_merges_sql(
     training chain carried through all rounds, finally unnesting
     v{n_merges} into (word, pos, subword, freq) — the oracle for
     ``text.bpe_segment_words`` (train and apply share the chain exactly
-    as the engine shares ``_bpe_train``).
+    as the engine returns the trainer's own final segmentation).
 
     ``encode=True`` (round 9) emits the CORPUS-ENCODE twin: the same
     chain, then subword ids by (SUM(freq) desc, subword asc) over the
@@ -1886,13 +1887,16 @@ def extension_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_tfidf": lambda s, d: tx.tfidf_top_terms(_docs(s, d), k=3),
         # round 8: learned BPE merges (Sennrich et al. 2016) — fixed-round
         # greedy pair merging over the word-frequency table; oracle is the
-        # unrolled positional (islands-parity) twin
+        # unrolled positional (islands-parity) twin.  max_vocab=1_000_000
+        # bounds the trainer's driver collect; the test corpora have 31
+        # distinct words, so the cap is a no-op and the uncapped oracle
+        # stays exact
         "text_bpe_merges": lambda s, d: tx.bpe_train_merges(
-            _docs(s, d), n_merges=8
+            _docs(s, d), n_merges=8, max_vocab=1_000_000
         ),
         # the APPLY twin: learned merges segmented back onto the vocab
         "text_bpe_segments": lambda s, d: tx.bpe_segment_words(
-            _docs(s, d), n_merges=8
+            _docs(s, d), n_merges=8, max_vocab=1_000_000
         ),
         # round 9: the tokenizer's last mile — per-document subword-id
         # stream (train on the full corpus, encode the doc_id%10 slice:

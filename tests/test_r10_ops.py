@@ -1,7 +1,7 @@
 """Round-10 regression tests.
 
-Covers the VERDICT r9 items: the bounded-collect contract on the local
-BPE path and the encode broadcast (#2), the trained-tokenizer reuse seam
+Covers the VERDICT r9 items: the bounded-collect contract on the BPE
+trainer and the encode broadcast (#2), the trained-tokenizer reuse seam
 (#3), and the ADVICE r9 bench/probe-runner fixes.
 """
 
@@ -32,38 +32,28 @@ def _toy_docs(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_auto_local_uncapped_raises(spark):
-    """engine='auto' past the threshold + max_vocab=None is the silent
-    driver-OOM footgun: the caller never opted into a collect, so it is
-    a hard error naming the fix."""
+def test_bpe_uncapped_warns_capped_silent(spark):
+    """Every BPE entry point trains through the driver-side loop, which
+    collects the (word, freq) table: max_vocab=None is loud, never
+    silent (toy corpora and probes stay usable); a cap is warning-free."""
     docs = _toy_docs(spark)
-    n = tx.BPE_LOCAL_ROUNDS + 1
-    with pytest.raises(ValueError, match="max_vocab"):
-        tx.bpe_train_merges(docs, n_merges=n, engine="auto")
-    with pytest.raises(ValueError, match="max_vocab"):
-        tx.bpe_segment_words(docs, n_merges=n, engine="auto")
-    # capped auto is the sanctioned form and trains fine (pair
-    # exhaustion stops the toy corpus long before 257 rounds)
-    m = tx.bpe_train_merges(docs, n_merges=n, max_vocab=10_000).collect()
-    assert 0 < len(m) < n
-
-
-def test_bpe_explicit_local_uncapped_warns(spark):
-    """Explicit engine='local' stays usable (tests/probes run it on toy
-    corpora) but the unbounded collect is loud, never silent."""
-    docs = _toy_docs(spark)
-    with pytest.warns(UserWarning, match="max_vocab"):
-        tx.bpe_train_merges(docs, n_merges=2, engine="local")
-    # capped local is warning-free
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        tx.bpe_train_merges(docs, n_merges=2, max_vocab=10_000, engine="local")
+    for fn in (
+        tx.bpe_train_merges,
+        tx.bpe_trained_vocab,
+        tx.bpe_segment_words,
+        tx.bpe_encode_ids,
+    ):
+        with pytest.warns(UserWarning, match="max_vocab"):
+            fn(docs, n_merges=2)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            fn(docs, n_merges=2, max_vocab=10_000)
 
 
 def test_bpe_encode_uncapped_broadcast_warns(spark):
     """The encode dictionary broadcast shares the same contract: uncapped
-    warns (any engine — the broadcast exists in both), capped is silent
-    and bit-identical on a bounded-vocab corpus."""
+    warns, capped is silent and bit-identical on a bounded-vocab
+    corpus."""
     docs = _toy_docs(spark)
     with pytest.warns(UserWarning, match="broadcast"):
         uncapped = sorted(

@@ -111,8 +111,11 @@ def test_round6_matches_engine_round(spark):
         1e-7, -1e-7, 5e-7, -5e-7, 1.5e-6, 123456.9999995, 1e15 + 0.5,
         3.0000004999999997, 0.30000000000000004, 1 / 3, -1 / 7, 2.5000005,
         -2.5000005, 99.9999995, -99.9999995, 1234.0000005,
+        float("inf"), float("-inf"), float("nan"), 1e22, -1e22, 1e300,
+        -1e300, 1.7976931348623157e308,
     ]
-    df = spark.createDataFrame(pd.DataFrame({"x": vals}))
+    # a typed row list, not pandas: pandas conversion turns NaN into NULL
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
     engine = [r["r"] for r in df.select(F.round("x", 6).alias("r")).collect()]
     ours = [sim._round6(v) for v in vals]
     # compare by repr so 0.0 vs -0.0 differences are caught too

@@ -1,7 +1,7 @@
 """Round-9 regression tests.
 
 Covers the VERDICT r8 items: the corpus subword encode (#2), the
-large-n_merges single-node BPE path (#3), the bench leak gate (#6), and
+driver-side BPE trainer (#3), the bench leak gate (#6), and
 the ADVICE r8 every_k validation fix.
 """
 
@@ -52,69 +52,102 @@ def test_every_k_must_be_positive_everywhere(spark):
 
 
 # ---------------------------------------------------------------------------
-# large-n_merges single-node BPE path (VERDICT r8 item 3)
+# the driver-side BPE trainer (VERDICT r8 item 3)
 # ---------------------------------------------------------------------------
 
 
-def test_bpe_local_engine_matches_distributed_on_real_corpus(spark, sf_dir):
-    """The equivalence the docstring promises: the collected sequential
-    loop learns the SAME merge sequence (ranks, pairs, counts) and the
-    SAME segmentations as the distributed fixed-round loop, at a merge
-    count past anything the unit tests exercise."""
+def _bpe_recount_reference(wf, n):
+    """Independent per-round recount reference for the BPE trainer
+    (regex-free, re-derives pair stats from scratch each round rather
+    than carrying state): returns (merges, {word: final syms})."""
+    from collections import Counter
+
+    segs = {w: [*w, tx.BPE_EOW] for w, _ in wf}
+    freq = dict(wf)
+    want = []
+    for r in range(n):
+        counts: Counter = Counter()
+        for w, syms in segs.items():
+            for i in range(len(syms) - 1):
+                counts[(syms[i], syms[i + 1])] += freq[w]
+        if not counts:
+            break
+        (lhs, rhs), c = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+        want.append((r, lhs, rhs, c))
+        for w, syms in segs.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == (lhs, rhs):
+                    out.append(lhs + rhs)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            segs[w] = out
+    return want, segs
+
+
+def test_bpe_trainer_matches_recount_reference_on_real_corpus(spark, sf_dir):
+    """The trainer learns the reference's merge sequence (ranks, pairs,
+    counts) and segmentations on the real corpus, at a merge count past
+    anything the unit tests exercise."""
+    from collections import Counter
+
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    wf = sorted(
+        Counter(
+            w
+            for r in docs.select("text").collect()
+            if r["text"] is not None
+            for w in r["text"].split(" ")
+            if w
+        ).items()
+    )
     n = 64
-    md = tx.bpe_train_merges(docs, n_merges=n, engine="distributed").collect()
-    ml = tx.bpe_train_merges(docs, n_merges=n, engine="local").collect()
-    assert [tuple(r) for r in md] == [tuple(r) for r in ml]
-    assert len(ml) == n  # the corpus supports 64 rounds without exhaustion
-    sd = sorted(
-        tuple(r)
-        for r in tx.bpe_segment_words(docs, n_merges=8, engine="distributed")
-        .collect()
+    want, _ = _bpe_recount_reference(wf, n)
+    got = [tuple(r) for r in tx.bpe_train_merges(docs, n_merges=n).collect()]
+    assert got == want
+    assert len(got) == n  # the corpus supports 64 rounds without exhaustion
+    _, segs = _bpe_recount_reference(wf, 8)
+    freq = dict(wf)
+    assert sorted(
+        tuple(r) for r in tx.bpe_segment_words(docs, n_merges=8).collect()
+    ) == sorted(
+        (w, pos, sub, freq[w])
+        for w, syms in segs.items()
+        for pos, sub in enumerate(syms)
     )
-    sl = sorted(
-        tuple(r)
-        for r in tx.bpe_segment_words(docs, n_merges=8, engine="local").collect()
-    )
-    assert sd == sl
 
 
 def test_bpe_sequential_exhaustion_matches_distributed(spark):
-    """Pair exhaustion: both engines stop early with the same (short)
-    merge table and keep every word's final one-symbol segmentation."""
+    """Pair exhaustion: the driver-side trainer stops early with a short
+    merge table and keeps every word's final one-symbol segmentation;
+    the distributed apply path (``merges=`` injection, the engine's
+    ``aggregate`` fold) reaches the same segmentation from that table."""
     docs = spark.createDataFrame([(0, "ab ab b")], "doc_id long, text string")
-    for engine in ("distributed", "local"):
-        m = tx.bpe_train_merges(docs, n_merges=50, engine=engine).collect()
-        assert 0 < len(m) < 50, engine
-        segs = tx.bpe_segment_words(docs, n_merges=50, engine=engine).collect()
-        words = {r["word"] for r in segs}
-        assert words == {"ab", "b"}, engine
-        # exhausted = every word is a single symbol
-        assert all(r["pos"] == 0 for r in segs), engine
-
-
-def test_bpe_engine_auto_threshold_and_validation(spark):
-    docs = _toy_docs(spark)
-    assert tx._bpe_resolve_engine("auto", tx.BPE_LOCAL_ROUNDS) == "distributed"
-    assert tx._bpe_resolve_engine("auto", tx.BPE_LOCAL_ROUNDS + 1) == "local"
-    with pytest.raises(ValueError, match="engine"):
-        tx.bpe_train_merges(docs, n_merges=2, engine="driver")
+    m = tx.bpe_train_merges(docs, n_merges=50)
+    assert 0 < m.count() < 50
+    segs = tx.bpe_segment_words(docs, n_merges=50).collect()
+    assert {r["word"] for r in segs} == {"ab", "b"}
+    # exhausted = every word is a single symbol
+    assert all(r["pos"] == 0 for r in segs)
+    applied = tx.bpe_segment_words(docs, merges=m).collect()
+    assert sorted(map(tuple, applied)) == sorted(map(tuple, segs))
 
 
 def test_bpe_local_respects_max_vocab_tiebreak(spark):
-    """The local path collects the SAME max_vocab-capped table as the
-    distributed one (shared _bpe_word_freq), so capping cannot diverge."""
+    """The driver-side trainer collects the max_vocab-capped table from
+    the shared _bpe_word_freq (the same one the merges= apply path
+    reads), so capping cannot diverge between train and apply."""
     docs = spark.createDataFrame(
         [(0, "aa bb bb cc cc")], "doc_id long, text string"
     )
-    for engine in ("distributed", "local"):
-        m = tx.bpe_train_merges(docs, n_merges=1, max_vocab=2, engine=engine)
-        row = m.collect()[0]
-        # capped table keeps bb and cc (freq 2, word asc) and drops aa;
-        # all four pairs tie at count 2 -> lhs asc picks lhs='b', and
-        # rhs asc picks '</w>' ('<' = 0x3C sorts before 'b' = 0x62 in
-        # both engines' binary string order)
-        assert (row["lhs"], row["rhs"], row["pair_count"]) == ("b", "</w>", 2), engine
+    row = tx.bpe_train_merges(docs, n_merges=1, max_vocab=2).collect()[0]
+    # capped table keeps bb and cc (freq 2, word asc) and drops aa;
+    # all four pairs tie at count 2 -> lhs asc picks lhs='b', and
+    # rhs asc picks '</w>' ('<' = 0x3C sorts before 'b' = 0x62 in
+    # both engines' binary string order)
+    assert (row["lhs"], row["rhs"], row["pair_count"]) == ("b", "</w>", 2)
 
 
 # ---------------------------------------------------------------------------
@@ -175,18 +208,6 @@ def test_bpe_encode_train_once_encode_new_batch_drops_oov(spark):
         r["subword"] for r in sorted(enc, key=lambda r: r["subword_pos"])
     )
     assert joined == "low" + tx.BPE_EOW
-
-
-def test_bpe_encode_local_engine_identical(spark):
-    docs = _toy_docs(spark)
-    a = sorted(
-        tuple(r) for r in tx.bpe_encode_ids(docs, n_merges=4).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in tx.bpe_encode_ids(docs, n_merges=4, engine="local").collect()
-    )
-    assert a == b
 
 
 def test_bpe_encode_empty_tokens_dropped_consistently(spark):
@@ -378,10 +399,9 @@ def test_avi_round_trip_property():
 
 
 def test_bpe_sequential_property_matches_recount_reference():
-    """_bpe_sequential vs an independent per-round recount reference
-    (regex-free, re-derives pair stats from scratch each round rather
-    than carrying state) over random tiny corpora — guards the pinned
-    tiebreak and the greedy non-overlap merge at fuzzed shapes."""
+    """_bpe_sequential vs the per-round recount reference over random
+    tiny corpora — guards the pinned tiebreak and the greedy non-overlap
+    merge at fuzzed shapes."""
     from hypothesis import given, settings, strategies as st
 
     word = st.text(alphabet="ab", min_size=1, max_size=6)
@@ -393,34 +413,7 @@ def test_bpe_sequential_property_matches_recount_reference():
 
         wf = sorted(Counter(words).items())
         got_merges, got_vocab = tx._bpe_sequential(wf, n)
-
-        segs = {w: [*w, tx.BPE_EOW] for w, _ in wf}
-        freq = dict(wf)
-        want = []
-        for r in range(n):
-            counts: Counter = Counter()
-            for w, syms in segs.items():
-                for i in range(len(syms) - 1):
-                    counts[(syms[i], syms[i + 1])] += freq[w]
-            if not counts:
-                break
-            (lhs, rhs), c = sorted(
-                counts.items(), key=lambda kv: (-kv[1], kv[0])
-            )[0]
-            want.append((r, lhs, rhs, c))
-            for w, syms in segs.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and (syms[i], syms[i + 1]) == (lhs, rhs)
-                    ):
-                        out.append(lhs + rhs)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                segs[w] = out
+        want, segs = _bpe_recount_reference(wf, n)
         assert got_merges == want
         assert {w: s for w, s, _ in got_vocab} == segs
 

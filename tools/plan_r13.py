@@ -1,6 +1,6 @@
 """Capture .explain("formatted") for named queries into plans/r13/.
 
-Round-12 optimization evidence: for each query touched this round we
+Round-13 optimization evidence: for each query touched this round we
 commit the physical plan BEFORE and AFTER the change so plan claims in
 OPTIMIZATION_r13.md (exchange counts, join strategies, pushed filters)
 are checkable without running Spark.

@@ -50,6 +50,29 @@ def synth_long(spark, n_obs: int, n_features: int, n_groups: int):
     return long
 
 
+def synth_docs(spark, n_docs: int):
+    """(doc_id, text) corpus shared by the text scale probes: ~12
+    tokens/doc over a FIXED ~2.2k-word vocabulary (id-mixing keeps the
+    word distribution zipf-ish but scale-independent, so growing n_docs
+    grows the corpus without growing the vocabulary)."""
+    return spark.range(n_docs).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ",
+            *[
+                F.concat(
+                    F.lit("w"),
+                    (
+                        (F.col("id") * (2 * j + 1) + j * j)
+                        % F.lit(2 ** (1 + (j * 7) % 11))
+                    ).cast("string"),
+                )
+                for j in range(12)
+            ],
+        ).alias("text"),
+    )
+
+
 def main() -> None:
     n_obs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_500_000
     n_features = int(sys.argv[2]) if len(sys.argv) > 2 else 40

@@ -38,7 +38,7 @@ from dask_mwu_spark.operators.retrieval import (  # noqa: E402
 )
 from dask_mwu_spark.operators.text import bm25_topk  # noqa: E402
 from dask_mwu_spark.session import get_spark  # noqa: E402
-from scale_probe_bpe import synth_docs  # noqa: E402
+from scale_probe import synth_docs  # noqa: E402
 
 TERMS = ["w1", "w7", "w13", "w28"]
 

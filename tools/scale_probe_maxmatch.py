@@ -4,7 +4,7 @@ vocabulary-bounded word table), and (b) the compiled-literal membership
 probe's cost grows with the INVENTORY size (linear array_contains scan
 — the documented few-thousand-piece bound before the broadcast-join
 growth path).  Both measured here on the fixed-vocabulary synthetic
-corpus (tools/scale_probe_bpe.synth_docs):
+corpus (tools/scale_probe.synth_docs):
 
 - ``seg_sec_1x`` vs ``seg_sec_kx``: full maxmatch_segment_words wall at
   corpus 1x and kx — should be ~flat (the scan is the only corpus-scale
@@ -32,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dask_mwu_spark.operators.text import maxmatch_segment_words
 from dask_mwu_spark.session import get_spark
-from scale_probe_bpe import synth_docs
+from scale_probe import synth_docs
 
 
 def main() -> int:

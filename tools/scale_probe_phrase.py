@@ -32,7 +32,7 @@ from dask_mwu_spark.operators.retrieval import (  # noqa: E402
     phrase_search_slop,
 )
 from dask_mwu_spark.session import get_spark  # noqa: E402
-from scale_probe_bpe import synth_docs  # noqa: E402
+from scale_probe import synth_docs  # noqa: E402
 
 
 def _phrases(n: int) -> list[str]:

@@ -5,7 +5,7 @@ grow far sub-linearly in n_queries and ~linearly in corpus size.  The
 RRF fuse claims to be depth-bounded (it joins only the rankers'
 top-depth lists), so fusing on top of a fixed ranker pair should add
 ~nothing.  All measured on the fixed-vocabulary synthetic corpus
-(tools/scale_probe_bpe.synth_docs):
+(tools/scale_probe.synth_docs):
 
 - ``bm25_sec_q{a,b,c}``: bm25_batch_topk wall at n_queries = q0, 8x,
   64x over the SAME corpus — the 64x point should be nowhere near 64x
@@ -38,7 +38,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from dask_mwu_spark.operators.retrieval import rrf_fuse  # noqa: E402
 from dask_mwu_spark.operators.text import bm25_batch_topk  # noqa: E402
 from dask_mwu_spark.session import get_spark  # noqa: E402
-from scale_probe_bpe import synth_docs  # noqa: E402
+from scale_probe import synth_docs  # noqa: E402
 
 
 def _queries(spark, n_queries: int):

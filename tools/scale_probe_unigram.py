@@ -4,7 +4,7 @@ on the vocabulary-bounded word table against an inventory-bounded
 model), and (b) wall grows ~linearly in ``n_iter`` (each extra round is
 one more bounded model-build + Viterbi pass + recount), never in corpus
 size.  Both measured on the fixed-vocabulary synthetic corpus
-(tools/scale_probe_bpe.synth_docs):
+(tools/scale_probe.synth_docs):
 
 - ``seg_sec_1x`` vs ``seg_sec_kx``: full unigram_lm_segments wall at
   corpus 1x and kx — should be ~flat (the scan is the only corpus-scale
@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dask_mwu_spark.operators.text import unigram_lm_segments
 from dask_mwu_spark.session import get_spark
-from scale_probe_bpe import synth_docs
+from scale_probe import synth_docs
 
 
 def main() -> int:
