@@ -227,34 +227,25 @@ def kruskal_wallis(group_stats: DataFrame) -> DataFrame:
     )
 
 
-def mann_whitney_u(
-    group_stats: DataFrame, feature_stats: DataFrame | None = None
-) -> DataFrame:
+def mann_whitney_u(group_stats: DataFrame) -> DataFrame:
     """Compose A1-A5 into the (feature, group) statistics table (A6,
     pvals.py:144-176).
 
-    By default (``feature_stats=None``) the per-feature totals are WINDOW
-    aggregates over ``group_stats`` — Catalyst then plans the whole MWU
-    pipeline as ONE branch with ONE parquet scan. Passing a precomputed
-    ``feature_stats`` table (the ``compute_tie_term`` output, reference M5
-    signature parity) instead broadcasts-joins it, which duplicates the
-    upstream plan tree: Spark does not common-subexpression-eliminate
-    across join branches, so that path re-scans and re-shuffles the raw
-    data once per branch — measured 1.9x slower end-to-end at sf0.1.
+    The per-feature totals are WINDOW aggregates over ``group_stats`` —
+    Catalyst then plans the whole MWU pipeline as ONE branch with ONE
+    parquet scan (a join against a separate per-feature table would
+    re-scan and re-shuffle the raw data once per join branch).
 
     Output: feature, group, n1, n2, rank_sum, tie_term, u_stat, z, p_value,
     p_adjusted.  NaN-poisoned features keep NULL rank-derived stats.
     """
-    if feature_stats is None:
-        wf = Window.partitionBy("feature")
-        joined = group_stats.select(
-            "*",
-            F.sum("n1").over(wf).alias("n_obs"),
-            F.sum("val_sum").over(wf).alias("total_sum"),
-            F.sum("tie_part").over(wf).alias("tie_term"),
-        )
-    else:
-        joined = group_stats.join(F.broadcast(feature_stats), "feature")
+    wf = Window.partitionBy("feature")
+    joined = group_stats.select(
+        "*",
+        F.sum("n1").over(wf).alias("n_obs"),
+        F.sum("val_sum").over(wf).alias("total_sum"),
+        F.sum("tie_part").over(wf).alias("tie_term"),
+    )
     n1 = F.col("n1").cast("double")
     n2 = (F.col("n_obs") - F.col("n1")).cast("double")
     r1, u_for_z = u_statistic(n1, n2, F.col("rank_sum"))

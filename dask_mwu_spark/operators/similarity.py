@@ -14,7 +14,7 @@ global sort of all scores.  For the LSH variant the join is on the bucket id.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dask_mwu_spark.cache import tracked_persist
@@ -70,6 +70,31 @@ def _with_vec(emb: DataFrame) -> DataFrame:
     return emb.select(
         "vec_id", as_double(F.col("embedding")).alias("vec")
     ).withColumn("nrm", norm(F.col("vec")))
+
+
+def _query_rows(
+    vecs: DataFrame, n_queries: int, vec_col: str = "vec", nrm_col: str = "nrm"
+) -> DataFrame:
+    """(q_id, q_vec, q_nrm): the ``n_queries`` smallest vec_ids of a
+    prepared frame — the bounded query side every corpus-query top-k
+    broadcasts."""
+    return vecs.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.col(nrm_col).alias("q_nrm"),
+    )
+
+
+def _top_k(
+    scored: DataFrame, by: str, score: str, k: int, rank: str = "_rn"
+) -> DataFrame:
+    """The one top-k tail: rows of ``scored`` numbered per ``by`` in
+    (``score`` desc, vec_id asc) order into column ``rank``, kept while
+    rank <= ``k``.  A window PARTITIONED by the query key — never a
+    global sort — and a deterministic vec_id tiebreak on the rounded
+    score, so the selected set is identical on every engine."""
+    w = Window.partitionBy(by).orderBy(F.col(score).desc(), F.col("vec_id").asc())
+    return scored.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
 
 
 # seed offset for the random-projection matrix: far past every LSH table's
@@ -128,11 +153,7 @@ def _brute_topk(
     vec_id tiebreak.  One definition so the full-width truth and any
     sliced/transformed variant (matryoshka_recall) can never
     desynchronize on the rounding/tiebreak contract."""
-    queries = vecs.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col(nrm_col).alias("q_nrm"),
-    )
+    queries = _query_rows(vecs, n_queries, vec_col, nrm_col)
     scored = (
         vecs.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("q_id"))
@@ -146,12 +167,7 @@ def _brute_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _top_k(scored, "q_id", "cosine", k).select("q_id", "vec_id", "cosine")
 
 
 def cosine_topk(
@@ -213,11 +229,8 @@ def lsh_cosine_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "cosine", "bucket")
+    return _top_k(scored, "q_id", "cosine", k).select(
+        "q_id", "vec_id", "cosine", "bucket"
     )
 
 
@@ -254,14 +267,9 @@ def lsh_multi_topk(
         )
         cand = pairs if cand is None else cand.unionByName(pairs)
     cand = cand.distinct()
-    queries = vecs.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
     scored = (
         cand.join(vecs, on="vec_id")
-        .join(F.broadcast(queries), on="q_id")
+        .join(F.broadcast(_query_rows(vecs, n_queries)), on="q_id")
         .select(
             "q_id",
             "vec_id",
@@ -270,12 +278,7 @@ def lsh_multi_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _top_k(scored, "q_id", "cosine", k).select("q_id", "vec_id", "cosine")
 
 
 N_CENTROIDS = 16
@@ -380,6 +383,40 @@ def ivf_index(
     )
 
 
+def _probe_cells(
+    queries: DataFrame,
+    cents: DataFrame,
+    by: str,
+    n_probe: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """(<by>, *carry, cent_id): the ``n_probe`` cells each query probes
+    — the one IVF probe selector.  ``queries`` holds the key ``by`` plus
+    (q_vec, q_nrm); ``cents`` is a :func:`_centroid_table`.  Cells rank
+    by query-centroid cosine rounded to 6 (desc), cent_id asc breaking
+    ties — the same order :func:`ivf_index` assigns by, so with
+    ``n_probe=1`` a corpus query probes its own cell.  The C-row
+    centroid table broadcasts onto the bounded query set; the probe
+    window is partitioned by the query key.  ``carry`` names the query
+    columns the scorer still needs downstream."""
+    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
+        by,
+        *carry,
+        "cent_id",
+        F.round(
+            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
+        ).alias("c_cos"),
+    )
+    wp = Window.partitionBy(by).orderBy(
+        F.col("c_cos").desc(), F.col("cent_id").asc()
+    )
+    return (
+        probe_scored.withColumn("_rn", F.row_number().over(wp))
+        .where(F.col("_rn") <= n_probe)
+        .select(by, *carry, "cent_id")
+    )
+
+
 def ivf_topk(
     emb: DataFrame,
     *,
@@ -399,33 +436,12 @@ def ivf_topk(
     (tracked — ``dask_mwu_spark.release_caches()`` drops it; see
     ``cache.py`` for the full contract).
     """
-    vecs = _with_vec(emb)
     cents = _centroid_table(emb, n_centroids, centroids)
     # persisted: the posting lists cost a C-way cross join + window to
     # build and should not be re-derived if the plan branches
     idx = ivf_index(emb, n_centroids=n_centroids, centroids=centroids).transform(tracked_persist)
-    queries = vecs.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "q_id",
-        "q_vec",
-        "q_nrm",
-        "cent_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("c_cos"),
-    )
-    wp = Window.partitionBy("q_id").orderBy(
-        F.col("c_cos").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .where(F.col("_rn") <= n_probe)
-        .select("q_id", "q_vec", "q_nrm", "cent_id")
-    )
+    queries = _query_rows(_with_vec(emb), n_queries)
+    probes = _probe_cells(queries, cents, "q_id", n_probe, ("q_vec", "q_nrm"))
     scored = (
         idx.join(probes, on="cent_id")
         .where(F.col("vec_id") != F.col("q_id"))
@@ -437,12 +453,7 @@ def ivf_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "cosine")
-    )
+    return _top_k(scored, "q_id", "cosine", k).select("q_id", "vec_id", "cosine")
 
 
 def _batch_query_table(queries: DataFrame) -> DataFrame:
@@ -494,15 +505,8 @@ def cosine_batch_topk(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
-        )
+    return _top_k(scored, "query_id", "cosine", k, "rank").select(
+        "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
     )
 
 
@@ -660,25 +664,7 @@ def ivf_batch_topk(
         idx = ivf_index(
             emb, n_centroids=n_centroids, centroids=centroids
         ).transform(tracked_persist)
-    probe_scored = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "q_vec",
-        "q_nrm",
-        "cent_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec"))
-            / (F.col("q_nrm") * F.col("c_nrm")),
-            6,
-        ).alias("c_cos"),
-    )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .where(F.col("_rn") <= n_probe)
-        .select("query_id", "q_vec", "q_nrm", "cent_id")
-    )
+    probes = _probe_cells(q, cents, "query_id", n_probe, ("q_vec", "q_nrm"))
     scored = idx.join(F.broadcast(probes), on="cent_id").select(
         "query_id",
         "vec_id",
@@ -688,15 +674,8 @@ def ivf_batch_topk(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
-        )
+    return _top_k(scored, "query_id", "cosine", k, "rank").select(
+        "query_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")
     )
 
 
@@ -776,6 +755,11 @@ def semantic_dup_pairs(
     Cluster sizes come from a ≤n_centroids-row broadcast — no extra
     vector shuffle.  The assignment table is persisted — it feeds both
     sides of the self-join.
+
+    ``n_centroids`` also sizes the pair-join salt (B above) when
+    ``centroids=`` is injected, so pass the injected table's row count
+    as ``n_centroids``: a larger value under-salts the join, a smaller
+    one replicates the x side more than the cells need.
     """
     idx = ivf_index(emb, n_centroids=n_centroids, centroids=centroids).transform(tracked_persist)
     join_keys = ["cent_id"]
@@ -844,7 +828,10 @@ def semantic_purge(
     """Vectors surviving semantic dedup: connected components over the
     within-cluster pair graph, keep the smallest vec_id per component.
     Pairs never cross clusters, so components are cluster-local and the
-    closure converges in O(log cluster-size) rounds."""
+    closure converges in O(log cluster-size) rounds.  As in
+    :func:`semantic_dup_pairs`, ``n_centroids`` sizes the pair-join salt
+    even when ``centroids=`` is injected, so it should equal the injected
+    table's row count."""
     from dask_mwu_spark.operators.dedup import dup_components
 
     pairs = semantic_dup_pairs(
@@ -937,14 +924,7 @@ def quantized_topk(
             ).alias("qcosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("qcosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "qcosine")
-    )
+    return _top_k(scored, "q_id", "qcosine", k).select("q_id", "vec_id", "qcosine")
 
 
 def embedding_dup_pairs(emb: DataFrame, *, tau: float = 0.99) -> DataFrame:
@@ -1226,87 +1206,46 @@ _PQ_OFFSET = 20_000
 def pq_codebook(s: int, c: int) -> list[float]:
     """Centroid ``c`` of subspace ``s`` — deterministic doubles from the
     module LCG, so the Spark plan, the DuckDB oracle, and pytest rebuild
-    bit-identical codebooks.  A real deployment plugs k-means-trained
-    codebooks in instead (same plan; see ``clf_weights`` precedent)."""
+    bit-identical codebooks.  The untrained default of the codebook
+    table every PQ path reads (see :func:`_lcg_codebooks`); a real
+    deployment passes a trained table instead
+    (:func:`pq_train_codebooks`, :func:`pq_topk_with_codebooks`)."""
     return [
         plane_weight(_PQ_OFFSET + s * N_PQ_CENTROIDS + c, d)
         for d in range(PQ_SUB_DIM)
     ]
 
 
-def pq_encode(emb: DataFrame) -> DataFrame:
-    """PQ encoding: (vec_id, s, code) — per subspace, the 0-based index of
-    the nearest codebook centroid (squared L2, distances ROUNDED to 6
-    before the argmin, first-min tiebreak → engine-identical codes).
-
-    Scale: pure per-row expression work — the 8x16 codebook rides as plan
-    literals (~8 KB), each vector evaluates 128 eight-term squared
-    distances inside whole-stage codegen, zero shuffle, zero Python.
-    The 4-bit-per-subspace code compresses a 64-dim float vector 64x —
-    the memory-bound ANN representation for corpora whose float vectors
-    do not fit the cluster (Jégou et al., TPAMI 2011).
-    """
-    vecs = _with_vec(emb)
-    code_cols = []
-    for s in range(N_PQ_SUB):
-        sub = F.slice(F.col("vec"), s * PQ_SUB_DIM + 1, PQ_SUB_DIM)
-        dists = F.array(
-            *[
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            sub,
-                            F.array(*[F.lit(w) for w in pq_codebook(s, c)]),
-                            lambda x, w: (x - w) * (x - w),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, t: acc + t,
-                    ),
-                    6,
-                )
-                for c in range(N_PQ_CENTROIDS)
-            ]
-        )
-        code_cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    return vecs.select(
-        "vec_id", F.posexplode(F.array(*code_cols)).alias("s", "code")
+def _lcg_codebooks(spark: SparkSession) -> DataFrame:
+    """The untrained (s, c, w: array<double>) codebook table: all
+    N_PQ_SUB x N_PQ_CENTROIDS ``pq_codebook`` centroids as one 128-row
+    driver-built frame (no Spark job) — the same shape
+    :func:`pq_train_codebooks` returns, so untrained and trained PQ share
+    every downstream operator."""
+    return spark.createDataFrame(
+        [
+            (s, c, pq_codebook(s, c))
+            for s in range(N_PQ_SUB)
+            for c in range(N_PQ_CENTROIDS)
+        ],
+        "s: int, c: int, w: array<double>",
     )
 
 
-def _pq_lut(vecs: DataFrame, *, n_queries: int) -> DataFrame:
-    """Per-query ADC lookup table (q_id, s, code, partial) with
-    ``partial = <q_sub_s, centroid_{s,code}>`` — n_queries x 8 x 16 rows,
-    always broadcast.  One definition shared by ``pq_topk`` and
-    ``ivf_pq_topk`` so the ADC contract cannot drift between them."""
-    lut_rows = []
-    for s in range(N_PQ_SUB):
-        sub = F.slice(F.col("vec"), s * PQ_SUB_DIM + 1, PQ_SUB_DIM)
-        partials = F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.array(*[F.lit(w) for w in pq_codebook(s, c)]),
-                        lambda x, w: x * w,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
-                )
-                for c in range(N_PQ_CENTROIDS)
-            ]
-        )
-        lut_rows.append(partials)
-    return (
-        vecs.where(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.posexplode(F.array(*lut_rows)).alias("s", "partials"),
-        )
-        .select(
-            "q_id", "s", F.posexplode("partials").alias("code", "partial")
-        )
+def pq_encode(emb: DataFrame) -> DataFrame:
+    """PQ encoding: (vec_id, s, code) — per subspace, the 0-based index of
+    the nearest ``pq_codebook`` centroid (squared L2, distances ROUNDED
+    to 6 before the argmin, first-min tiebreak → engine-identical codes).
+
+    Scale: :func:`_encode_codes` against the 128-row LCG codebook table —
+    one corpus scan, the codebook rides a 1-row broadcast, zero shuffle
+    of the vectors, zero Python.  The 4-bit-per-subspace code compresses
+    a 64-dim float vector 64x — the memory-bound ANN representation for
+    corpora whose float vectors do not fit the cluster (Jégou et al.,
+    TPAMI 2011).
+    """
+    return _encode_codes(
+        _subvectors(_with_vec(emb)), _lcg_codebooks(emb.sparkSession)
     )
 
 
@@ -1320,6 +1259,9 @@ def pq_topk(
     (q_id, vec_id, score) with score rounded to 6, ranked score desc +
     vec_id tiebreak.
 
+    :func:`pq_topk_with_codebooks` over the untrained ``pq_codebook``
+    table.
+
     Scale: the LUT is ``n_queries x 8 x 16`` rows — a bounded BROADCAST;
     candidates contribute their 8-row code table to ONE (s, code)
     equi-join against it (key domain 128 — uniform by construction) and
@@ -1331,30 +1273,8 @@ def pq_topk(
     folds in subspace order (sort_array) — deterministic on any
     engine/partitioning.
     """
-    codes = pq_encode(emb)
-    lut = _pq_lut(_with_vec(emb), n_queries=n_queries)
-    scored = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .where(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("s", "partial"))),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x["partial"],
-                ),
-                6,
-            ).alias("score")
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "score")
+    return pq_topk_with_codebooks(
+        emb, _lcg_codebooks(emb.sparkSession), n_queries=n_queries, k=k
     )
 
 
@@ -1381,63 +1301,18 @@ def ivf_pq_topk(
     subspace order.  The posting-list float vectors are touched only at
     INDEX BUILD (assignment + encode, each one corpus scan); the query
     path reads codes only — the memory shape that serves 1e9 vectors.
-    ``centroids=`` swaps in trained (KMeans||) cells and a real
-    deployment plugs trained codebooks into ``pq_codebook``'s seam; the
-    plan is identical.
+    ``centroids=`` swaps in trained (KMeans||) cells; the codebook is the
+    untrained ``pq_codebook`` table.  :func:`ivf_pq_topk_trained` runs
+    the same serve path with both halves trained.
     """
-    vecs = _with_vec(emb)
-    cents = _centroid_table(emb, n_centroids, centroids)
-    idx = ivf_index(emb, n_centroids=n_centroids, centroids=centroids).transform(tracked_persist)
-    codes = pq_encode(emb)
-    queries = vecs.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "q_id",
-        "cent_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("c_cos"),
-    )
-    wp = Window.partitionBy("q_id").orderBy(
-        F.col("c_cos").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .where(F.col("_rn") <= n_probe)
-        .select("q_id", "cent_id")
-    )
-    cand = (
-        idx.select("vec_id", "cent_id")
-        .join(F.broadcast(probes), "cent_id")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-    )
-    lut = _pq_lut(vecs, n_queries=n_queries)
-    scored = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["q_id", "s", "code"])
-        .groupBy("q_id", "vec_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("s", "partial"))),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x["partial"],
-                ),
-                6,
-            ).alias("score")
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "score")
+    return _ivf_pq_serve(
+        emb,
+        _lcg_codebooks(emb.sparkSession),
+        n_centroids=n_centroids,
+        centroids=centroids,
+        n_probe=n_probe,
+        n_queries=n_queries,
+        k=k,
     )
 
 
@@ -1458,8 +1333,9 @@ def _subvectors(vecs: DataFrame) -> DataFrame:
 
 
 def _sub_sq_dist(x: Column, w: Column) -> Column:
-    """round6(||x - w||^2) — the engine-identical 8-term left-assoc fold
-    both pq_encode and the trained path use for centroid assignment."""
+    """round6(||x - w||^2) — the engine-identical left-assoc fold the PQ
+    encoder (:func:`_encode_codes`) and the engine-side Lloyd round
+    (:func:`_lloyd_round_expr`) assign centroids by."""
     return F.round(
         F.aggregate(
             F.zip_with(x, w, lambda a, b: (a - b) * (a - b)),
@@ -1492,24 +1368,18 @@ def pq_train_codebooks(
     codebooks round by round; empty clusters keep their previous
     position (left-join + coalesce on BOTH engines).
 
-    Scale: training is bounded by design — n_train x 8 subvector rows
-    join a broadcast 128-row codebook per round (k-means at corpus scale
+    Scale: training is bounded by design — k-means at corpus scale
     always trains on a sample; the ENCODE step is what touches all N
-    vectors, once, in pq_topk_with_codebooks).  Each round ends in a
-    localCheckpoint (128 rows) so the lineage does not double per round
-    — this does the tiny training work EAGERLY at construction."""
+    vectors, once, in pq_topk_with_codebooks.  The n_train x 8 subvector
+    sample is collected in ONE bounded job and the rounds run in a
+    driver loop (:func:`_lloyd_iterations`), so the training work runs
+    EAGERLY at construction and the codebook comes back as a 128-row
+    driver-built frame."""
     train = _subvectors(_with_vec(emb)).where(F.col("vec_id") < n_train)
     cb = train.where(F.col("vec_id") < N_PQ_CENTROIDS).select(
         "s", F.col("vec_id").cast("int").alias("c"), F.col("x").alias("w")
     )
     return _lloyd_iterations(train, cb, n_iter=n_iter, dim=PQ_SUB_DIM)
-
-
-# chain up to this many Lloyd rounds inside one select between eager
-# checkpoints: each round appears exactly ONCE in the expression (the
-# let-binding below), so growth is linear in rounds; the cadence only
-# bounds expression DEPTH for large n_iter
-LLOYD_CKPT_EVERY = 2
 
 
 def _lloyd_round_expr(T, C, dim: int):
@@ -1520,7 +1390,9 @@ def _lloyd_round_expr(T, C, dim: int):
     c-ascending candidates == the old (d asc, c asc) row_number
     tiebreak; per-(s,c) sums fold in vec_id order because T is sorted
     by (vec_id, s) and transform/filter preserve order; round6 means;
-    empty clusters keep their previous position."""
+    empty clusters keep their previous position.  Training runs in the
+    driver loop; this expression is kept as the engine-side reference
+    that loop is pinned against (test_r13_ops)."""
 
     def argmin_c(t):
         cands = F.transform(
@@ -1723,11 +1595,12 @@ def kmeans_train_fixed(
 
 
 def _encode_codes(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """(vec_id, s, code) — nearest trained centroid per subvector:
-    round6 distance, first-min (d, c) tiebreak.  Shared by
-    pq_topk_with_codebooks and ivf_pq_topk_trained so the encode
-    contract cannot drift between them (and both oracle twins mirror
-    this single definition).
+    """(vec_id, s, code) — nearest codebook centroid per subvector:
+    round6 distance, first-min (d, c) tiebreak.  The one PQ encoder:
+    every PQ path encodes through it, whether ``codebooks`` is the
+    untrained LCG table or a trained one, so the encode contract cannot
+    drift between them (and every oracle twin mirrors this single
+    definition).
 
     Zero-shuffle form (optimization r12, guide §2.4): the former
     broadcast join exploded every subvector into |codes| distance rows
@@ -1773,10 +1646,11 @@ def _encode_codes(subs: DataFrame, codebooks: DataFrame) -> DataFrame:
 def _adc_lut(
     subs: DataFrame, codebooks: DataFrame, *, n_queries: int
 ) -> DataFrame:
-    """(q_id, s, code, partial) ADC lookup table against a TRAINED
-    codebook table — the join-based counterpart of ``_pq_lut`` (whose
-    codebooks are plan literals); partial is the in-order 8-term dot
-    fold.  Shared by pq_topk_with_codebooks and ivf_pq_topk_trained."""
+    """(q_id, s, code, partial) — the one ADC lookup-table builder:
+    ``partial = <q_sub_s, centroid_{s,code}>`` for the ``n_queries``
+    smallest vec_ids against a (s, c, w) codebook table, n_queries x 128
+    rows (always broadcast downstream); partial is the in-order 8-term
+    dot fold."""
     return (
         subs.where(F.col("vec_id") < n_queries)
         .join(F.broadcast(codebooks), "s")
@@ -1793,6 +1667,17 @@ def _adc_lut(
     )
 
 
+def _adc_sum() -> Column:
+    """The one ADC scorer, an aggregate over a group's (s, partial)
+    LUT hits: Σ_s partial folded in subspace order (sort_array), so the
+    unrounded sum is deterministic on any engine/partitioning."""
+    return F.aggregate(
+        F.sort_array(F.collect_list(F.struct("s", "partial"))),
+        F.lit(0.0).cast("double"),
+        lambda acc, x: acc + x["partial"],
+    )
+
+
 def pq_topk_with_codebooks(
     emb: DataFrame,
     codebooks: DataFrame,
@@ -1800,44 +1685,67 @@ def pq_topk_with_codebooks(
     n_queries: int = 10,
     k: int = 5,
 ) -> DataFrame:
-    """PQ ADC top-k through an ARBITRARY codebook table (s, c, w) — the
-    generalized, join-based form of ``pq_topk`` (whose codebooks are plan
-    literals).  Same output contract: (q_id, vec_id, score), score =
-    round6 in-subspace-order partial fold, ranked desc + vec_id tiebreak.
+    """PQ ADC top-k through a codebook table (s, c, w) — trained
+    (:func:`pq_train_codebooks`) or the untrained LCG table
+    :func:`pq_topk` passes.  Output (q_id, vec_id, score), score =
+    round6 in-subspace-order partial fold, ranked desc + vec_id
+    tiebreak.
 
     Scale: the codebook is 128 rows — ALWAYS broadcast; encode is one
     corpus scan (subvector explode x 1-row broadcast codebook array,
     scan-stage argmin fold — zero shuffle, optimization r12); the LUT
-    is n_queries x 128 rows (broadcast); scoring joins
-    codes to the LUT on the 128-value (s, code) key exactly like
-    ``pq_topk``.  The float vectors never shuffle."""
-    vecs = _with_vec(emb)
-    subs = _subvectors(vecs)
+    is n_queries x 128 rows (broadcast); scoring joins codes to the LUT
+    on the 128-value (s, code) key.  The float vectors never shuffle."""
+    subs = _subvectors(_with_vec(emb))
     codes = _encode_codes(subs, codebooks)
     lut = _adc_lut(subs, codebooks, n_queries=n_queries)
     scored = (
         codes.join(F.broadcast(lut), ["s", "code"])
         .where(F.col("vec_id") != F.col("q_id"))
         .groupBy("q_id", "vec_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("s", "partial"))),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x["partial"],
-                ),
-                6,
-            ).alias("score")
-        )
+        .agg(F.round(_adc_sum(), 6).alias("score"))
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
+    return _top_k(scored, "q_id", "score", k).select("q_id", "vec_id", "score")
+
+
+def _ivf_pq_serve(
+    emb: DataFrame,
+    codebooks: DataFrame,
+    *,
+    n_centroids: int,
+    centroids: DataFrame | None,
+    n_probe: int,
+    n_queries: int,
+    k: int,
+) -> DataFrame:
+    """The one IVF-PQ serve path behind :func:`ivf_pq_topk` and
+    :func:`ivf_pq_topk_trained`, which differ only in where the cells
+    (``centroids``, see :func:`_centroid_table`) and the (s, c, w)
+    ``codebooks`` come from.  Candidates are the probed cells' postings
+    (self excluded); each scores through its 8-row code table joined to
+    the broadcast n_queries x 128 LUT on (q_id, s, code).  The
+    posting-list index is persisted for the session (tracked —
+    ``dask_mwu_spark.release_caches()`` drops it)."""
+    vecs = _with_vec(emb)
+    cents = _centroid_table(emb, n_centroids, centroids)
+    idx = ivf_index(emb, n_centroids=n_centroids, centroids=centroids).transform(tracked_persist)
+    subs = _subvectors(vecs)
+    codes = _encode_codes(subs, codebooks)
+    probes = _probe_cells(_query_rows(vecs, n_queries), cents, "q_id", n_probe)
+    cand = (
+        idx.select("vec_id", "cent_id")
+        .join(F.broadcast(probes), "cent_id")
+        .where(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", "vec_id")
     )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "score")
+    lut = _adc_lut(subs, codebooks, n_queries=n_queries)
+    scored = (
+        cand.join(codes, "vec_id")
+        .join(F.broadcast(lut), ["q_id", "s", "code"])
+        .groupBy("q_id", "vec_id")
+        .agg(F.round(_adc_sum(), 6).alias("score"))
     )
+    return _top_k(scored, "q_id", "score", k).select("q_id", "vec_id", "score")
 
 
 def ivf_pq_topk_trained(
@@ -1860,73 +1768,28 @@ def ivf_pq_topk_trained(
 
     Scale: both trainings are bounded-sample (corpus-size-flat, see
     tools/scale_probe_pq_trained.py); cell assignment and encode are
-    each ONE broadcast-join corpus scan; the query path joins the
-    candidates' 8-row code tables to the broadcast n_queries x 128 LUT
-    exactly like ``ivf_pq_topk``.  Output (q_id, vec_id, score) with the
+    each ONE broadcast-join corpus scan; the query path is
+    :func:`ivf_pq_topk`'s — the candidates' 8-row code tables join the
+    broadcast n_queries x 128 LUT.  Output (q_id, vec_id, score) with the
     ADC contract (round6, score desc + vec_id tiebreak).
 
     Caching contract: the posting-list index is persisted for the session
     (tracked — ``dask_mwu_spark.release_caches()`` drops it; see
     ``cache.py``; ADVICE r6 fix for the per-invocation cache leak)."""
-    vecs = _with_vec(emb)
-    # train each half ONCE (the Lloyd loop is eager via localCheckpoint)
+    # train each half ONCE: one bounded collect plus a driver-side Lloyd
+    # loop each (see _lloyd_iterations)
     trained_cells = kmeans_train_fixed(
         emb, k=k_cells, n_train=n_train, n_iter=n_iter
     )
-    cents = _centroid_table(emb, k_cells, trained_cells)
-    idx = ivf_index(emb, centroids=trained_cells).transform(tracked_persist)
     codebooks = pq_train_codebooks(emb, n_train=n_train, n_iter=n_iter)
-    subs = _subvectors(vecs)
-    codes = _encode_codes(subs, codebooks)
-    queries = vecs.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "q_id",
-        "cent_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("c_cos"),
-    )
-    wp = Window.partitionBy("q_id").orderBy(
-        F.col("c_cos").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .where(F.col("_rn") <= n_probe)
-        .select("q_id", "cent_id")
-    )
-    cand = (
-        idx.select("vec_id", "cent_id")
-        .join(F.broadcast(probes), "cent_id")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id")
-    )
-    lut = _adc_lut(subs, codebooks, n_queries=n_queries)
-    scored = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["q_id", "s", "code"])
-        .groupBy("q_id", "vec_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("s", "partial"))),
-                    F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x["partial"],
-                ),
-                6,
-            ).alias("score")
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "score")
+    return _ivf_pq_serve(
+        emb,
+        codebooks,
+        n_centroids=k_cells,
+        centroids=trained_cells,
+        n_probe=n_probe,
+        n_queries=n_queries,
+        k=k,
     )
 
 
@@ -1996,26 +1859,8 @@ def ivf_pq_residual_topk(
         rtrain, rcb0, n_iter=n_iter, dim=PQ_SUB_DIM
     )
     codes = _encode_codes(rsubs, codebooks)
-    queries = vecs.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    probe_scored = queries.crossJoin(F.broadcast(cents)).select(
-        "q_id",
-        "cent_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("c_cos"),
-    )
-    wp = Window.partitionBy("q_id").orderBy(
-        F.col("c_cos").desc(), F.col("cent_id").asc()
-    )
-    probes = (
-        probe_scored.withColumn("_rn", F.row_number().over(wp))
-        .where(F.col("_rn") <= n_probe)
-        .select("q_id", "cent_id")
-    )
+    queries = _query_rows(vecs, n_queries)
+    probes = _probe_cells(queries, cents, "q_id", n_probe)
     # exact q·c per (query, cell) — bounded n_queries × k_cells rows
     qc = queries.crossJoin(F.broadcast(cents)).select(
         "q_id", "cent_id", dot(F.col("q_vec"), F.col("c_vec")).alias("qc")
@@ -2031,27 +1876,14 @@ def ivf_pq_residual_topk(
         cand.join(codes, "vec_id")
         .join(F.broadcast(lut), ["q_id", "s", "code"])
         .groupBy("q_id", "vec_id", "cent_id")
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("s", "partial"))),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x["partial"],
-            ).alias("_rsum")
-        )
+        .agg(_adc_sum().alias("_rsum"))
     )
     scored = est.join(F.broadcast(qc), ["q_id", "cent_id"]).select(
         "q_id",
         "vec_id",
         F.round(F.col("qc") + F.col("_rsum"), 6).alias("score"),
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "vec_id", "score")
-    )
+    return _top_k(scored, "q_id", "score", k).select("q_id", "vec_id", "score")
 
 
 def _with_vec_label(emb: DataFrame) -> DataFrame:
@@ -2104,13 +1936,8 @@ def hard_negatives(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select("q_id", "q_label", "vec_id", "neg_label", "cosine")
+    return _top_k(scored, "q_id", "cosine", k).select(
+        "q_id", "q_label", "vec_id", "neg_label", "cosine"
     )
 
 
@@ -2156,12 +1983,8 @@ def knn_label_consistency(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
     per_q = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
+        _top_k(scored, "q_id", "cosine", k)
         .groupBy("q_id", "q_label")
         .agg(
             F.round(
@@ -2602,11 +2425,7 @@ def abtt_contrast(
         vecs = proj.select(
             "vec_id", F.col(vec_col).alias("v")
         ).withColumn("nrm", norm(F.col("v")))
-        queries = vecs.where(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("q_vec"),
-            F.col("nrm").alias("q_nrm"),
-        )
+        queries = _query_rows(vecs, n_queries, "v")
         scored = (
             vecs.crossJoin(F.broadcast(queries))
             .where(F.col("vec_id") != F.col("q_id"))

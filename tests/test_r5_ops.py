@@ -523,17 +523,25 @@ def test_pq_recall_high_when_vectors_are_quantizable(spark):
 def test_ivf_pq_scores_subset_of_pq_cells(spark):
     """IVF-PQ candidates are exactly the probed-cell members, and every
     reported score equals the full PQ ADC score of that pair (the cell
-    restriction changes WHICH pairs are scored, never the score)."""
-    from dask_mwu_spark.operators.similarity import ivf_pq_topk, pq_topk
+    restriction changes WHICH pairs are scored, never the score) — for
+    the seeded cells and for injected ``centroids=`` alike."""
+    from dask_mwu_spark.operators.similarity import (
+        ivf_pq_topk,
+        kmeans_train_fixed,
+        pq_topk,
+    )
 
     base = rng.normal(size=(30, 64))
     emb = _emb(spark, base)
-    ivf = ivf_pq_topk(emb, n_queries=3, k=4, n_probe=16).toPandas()
-    # n_probe = n_centroids probes EVERY cell -> identical to plain PQ ADC
     full = pq_topk(emb, n_queries=3, k=4).toPandas()
-    a = ivf.sort_values(["q_id", "vec_id"]).reset_index(drop=True)
     b = full.sort_values(["q_id", "vec_id"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    for centroids in (None, kmeans_train_fixed(emb)):
+        # n_probe = n_centroids probes EVERY cell -> identical to plain PQ ADC
+        ivf = ivf_pq_topk(
+            emb, n_queries=3, k=4, n_probe=16, centroids=centroids
+        ).toPandas()
+        a = ivf.sort_values(["q_id", "vec_id"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b)
 
 
 def test_ivf_pq_restricts_candidates(spark):

@@ -5,6 +5,10 @@ strategies).  Evidence artifact for plan review — run after any operator
 refactor and diff.
 
 Run: python tools/dump_plans.py [queries...]
+
+With no query names it rewrites PLANS.md with every headline section.
+With names it prints just those sections to stdout and leaves PLANS.md
+alone — the form to diff one query's plan between two checkouts.
 """
 
 from __future__ import annotations
@@ -113,7 +117,8 @@ def plan_summary(plan: str) -> str:
 
 
 def main() -> None:
-    names = sys.argv[1:] or (BENCH_QUERIES + R4_EXTRAS)
+    picked = sys.argv[1:]
+    names = picked or (BENCH_QUERIES + R4_EXTRAS)
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
@@ -128,10 +133,13 @@ def main() -> None:
         out.append(f"\n## {name}\n")
         out.append(f"**{plan_summary(plan)}**\n")
         out.append("```\n" + plan.strip() + "\n```\n")
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo_root, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"PLANS.md written ({len(names)} queries)")
+    if picked:
+        print("\n".join(out))
+    else:
+        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        with open(os.path.join(repo_root, "PLANS.md"), "w") as f:
+            f.write("\n".join(out))
+        print(f"PLANS.md written ({len(names)} queries)")
     spark.stop()
 
 
