@@ -297,10 +297,12 @@ def _q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_wilcoxon_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the full SQL-expressible slice of the pipeline in one query.
 
-    Routed through the bucketed two-phase rank (identical output,
+    Routed through the bucketed two-phase rank (identical statistics,
     tools/scale_probe_rank.py): lineitem's extendedprice is near-unique,
     so even at sf0.1 the windowed plan's single per-feature sort task is
-    the critical path — measured 4.4s windowed vs 2.5s bucketed."""
+    the critical path — measured 4.4s windowed vs 2.5s bucketed.  The
+    value-level rows cross one (feature, bucket) shuffle; the bucket
+    offsets are applied to the per-(feature, bucket, group) sums."""
     st = compute_logfoldchange(
         feature_group_stats(
             obs_measure_from_lineitem(spark, sf_dir, log1p=True),
@@ -361,8 +363,9 @@ def _q_mwu_full_rounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_events_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-feature measure: partitionBy(feature) constant-folds to a
-    # GLOBAL window sort — the hot-feature shape.  Route through the
-    # bucketed two-phase rank (identical output, tools/scale_probe_rank.py)
+    # GLOBAL window sort — the hot-feature shape.  The bucketed two-phase
+    # rank sorts it as 32 (feature, bucket) units on one shuffle and
+    # returns identical statistics (tools/scale_probe_rank.py)
     st = feature_group_stats(
         obs_measure_from_events(spark, sf_dir), n_value_buckets=32
     )

@@ -30,10 +30,10 @@ of that feature NULL; rank-derived statistics go NULL with it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import numbers
 
-from dask_mwu_spark.cache import tracked_persist
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
 
 from dask_mwu_spark.errors import InvalidDimensionError
 
@@ -48,6 +48,13 @@ def _check_measure(measure: DataFrame) -> None:
         )
 
 
+def _canonical_value() -> Column:
+    """``value`` as DOUBLE with NULL canonicalized to NaN."""
+    return F.when(F.col("value").isNull(), F.lit(float("nan"))).otherwise(
+        F.col("value").cast("double")
+    )
+
+
 def value_counts(measure: DataFrame) -> DataFrame:
     """Compress raw observations to distinct (feature, value, group) counts.
 
@@ -60,12 +67,7 @@ def value_counts(measure: DataFrame) -> DataFrame:
     """
     _check_measure(measure)
     return (
-        measure.withColumn(
-            "value",
-            F.when(F.col("value").isNull(), F.lit(float("nan"))).otherwise(
-                F.col("value").cast("double")
-            ),
-        )
+        measure.withColumn("value", _canonical_value())
         .groupBy("feature", "value", "group")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -74,12 +76,43 @@ def value_counts(measure: DataFrame) -> DataFrame:
 AUTO_DISTINCT_THRESHOLD = 2_000_000
 """Per-feature distinct-value count above which ``n_value_buckets='auto'``
 switches from the windowed plan to the bucketed two-phase rank.  Chosen
-from two measured points: at ~600k distinct (sf0.1 lineitem prices) the
-bucketed plan already wins ~2x end-to-end, at ~16M distinct
-(tools/scale_probe_rank.py) it wins 8x — while on low-cardinality
+from two points measured on the earlier two-shuffle bucketed plan: at
+~600k distinct (sf0.1 lineitem prices) it won ~2x end-to-end, at ~16M
+distinct (tools/scale_probe_rank.py) 8x — while on low-cardinality
 features the windowed plan's single small sort beats the extra bucket
-shuffle.  The threshold sits between the regimes, biased high so auto
+shuffle.  The one-shuffle plan, same probe at 2x4M rows (~3.2M distinct
+per feature, 4 cores): windowed 19 s, bucketed 17 s.  The threshold sits between the regimes, biased high so auto
 never pessimizes the common categorical case."""
+
+
+def _check_n_buckets(n, name: str) -> int:
+    if isinstance(n, bool) or not isinstance(n, numbers.Integral) or n < 1:
+        raise InvalidDimensionError(
+            f"{name} must be None, 'auto' or an int >= 1, got {n!r}"
+        )
+    return int(n)
+
+
+def resolve_value_buckets(
+    measure: DataFrame, n_value_buckets: int | str | None
+) -> int | None:
+    """The bucket count a ``n_value_buckets`` argument asks for: None for
+    the windowed plan, else an int >= 1.  ``"auto"`` runs the one
+    approx_count_distinct action described in :func:`rank_values`; any
+    other value that is not an int >= 1 (bools included) raises
+    :class:`InvalidDimensionError`."""
+    if n_value_buckets is None:
+        return None
+    if isinstance(n_value_buckets, str) and n_value_buckets == "auto":
+        hottest = (
+            measure.groupBy("feature")
+            .agg(F.approx_count_distinct("value").alias("d"))
+            .agg(F.max("d").alias("m"))
+            .collect()[0]
+            .m
+        )
+        return 64 if hottest and hottest >= AUTO_DISTINCT_THRESHOLD else None
+    return _check_n_buckets(n_value_buckets, "n_value_buckets")
 
 
 def rank_values(
@@ -103,7 +136,7 @@ def rank_values(
     ``n_value_buckets``: the default plan's per-feature window puts one
     feature's distinct values in ONE task — fine up to millions of distinct
     values per feature, a hot task beyond (few continuous features x 1e9
-    observations).  Setting an int routes to
+    observations).  Setting an int >= 1 routes to
     :func:`rank_values_bucketed`, the two-phase distributed rank with
     (features x buckets)-way parallelism and identical output.
 
@@ -117,19 +150,9 @@ def rank_values(
     who don't get the Catalyst-spirit behavior of picking the physical
     strategy from data statistics instead of guessing.
     """
-    if n_value_buckets == "auto":
-        hottest = (
-            measure.groupBy("feature")
-            .agg(F.approx_count_distinct("value").alias("d"))
-            .agg(F.max("d").alias("m"))
-            .collect()[0]
-            .m
-        )
-        n_value_buckets = (
-            64 if hottest and hottest >= AUTO_DISTINCT_THRESHOLD else None
-        )
-    if n_value_buckets is not None:
-        return rank_values_bucketed(measure, n_buckets=n_value_buckets)
+    n_buckets = resolve_value_buckets(measure, n_value_buckets)
+    if n_buckets is not None:
+        return rank_values_bucketed(measure, n_buckets=n_buckets)
     vc = value_counts(measure)
     w = Window.partitionBy("feature").orderBy("value")
     # RANGE CURRENT ROW..CURRENT ROW = all value-peers; RANGE UNBOUNDED
@@ -154,6 +177,82 @@ def rank_values(
     )
 
 
+def _bucketed_local_ranks(measure: DataFrame, n_buckets: int) -> DataFrame:
+    """The bucketed rank's one value-level shuffle: distinct (feature,
+    _bkt, value, group) counts ``c`` with their tie count ``t`` and their
+    average rank ``_loc`` WITHIN the (feature, _bkt) bucket.
+
+    ``_bkt`` is projected on the raw rows from a tiny broadcast of
+    per-feature min/max, then the rows are hash-partitioned on (feature,
+    _bkt) once: the count and the value-ordered window both require a
+    clustering that partitioning already satisfies, so Catalyst plans no
+    second exchange over value-level rows.  Equal values share a bucket,
+    so ``t`` is the feature-wide tie count.
+
+    NaN rows park in bucket ``n_buckets + 1`` past every real value; their
+    ranks are NULL anyway (propagate semantics) but their counts must
+    survive for group sizes, so they stay in the table.
+    """
+    _check_measure(measure)
+    n_buckets = _check_n_buckets(n_buckets, "n_buckets")
+    raw = measure.select("feature", "group", _canonical_value().alias("value"))
+    stats = raw.groupBy(F.col("feature").alias("_f")).agg(
+        F.min("value").alias("_vmin"), F.max("value").alias("_vmax")
+    )
+    bkt = (
+        F.when(F.isnan("value"), F.lit(n_buckets + 1))
+        # Spark max() treats NaN as the largest double, so a NaN-poisoned
+        # feature has _vmax = NaN and width_bucket would return NULL.  Ranks
+        # are NULL for these features anyway; any deterministic non-null
+        # bucket keeps the counts intact.
+        .when(F.isnan("_vmax"), F.lit(1))
+        .when(F.col("_vmin") == F.col("_vmax"), F.lit(1))
+        # width_bucket is NULL for an infinite bound, so a feature with
+        # +-Inf values falls into one bucket through least()
+        .otherwise(
+            F.least(
+                F.lit(n_buckets),
+                F.width_bucket("value", "_vmin", "_vmax", F.lit(n_buckets)),
+            )
+        )
+    )
+    wloc = Window.partitionBy("feature", "_bkt").orderBy("value")
+    t = F.sum("c").over(wloc.rangeBetween(Window.currentRow, Window.currentRow))
+    cum_loc = F.sum("c").over(
+        wloc.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # Every row matches its feature's stats row (NULL features too: <=>),
+    # so the LEFT join only decides where ``feature`` comes from: taken from
+    # the outer side, a constant feature (a single-feature measure built
+    # with lit()) is not constant-folded out of the partitioning below,
+    # which would drop it from every partition spec (a global window) and
+    # stop the count and the window from reusing the one exchange.
+    return (
+        raw.join(F.broadcast(stats), raw["feature"].eqNullSafe(stats["_f"]), "left")
+        .select(F.col("_f").alias("feature"), "group", "value", bkt.alias("_bkt"))
+        .repartition("feature", "_bkt")
+        .groupBy("feature", "_bkt", "value", "group")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .withColumn("t", t)
+        .withColumn("_loc", cum_loc - (F.col("t") - F.lit(1)) / F.lit(2.0))
+    )
+
+
+def _with_bucket_offsets(per_bucket: DataFrame) -> DataFrame:
+    """Add ``_off`` (rows in the feature's lower buckets) and ``has_nan``
+    to a tiny table keyed by (feature, _bkt[, ...]) with row counts ``_n``
+    and NaN flags ``_nan``.  The RANGE frame ends one bucket below the
+    current one, so several rows per bucket (one per group) are fine."""
+    wb = Window.partitionBy("feature").orderBy("_bkt")
+    return per_bucket.withColumn(
+        "_off",
+        F.coalesce(
+            F.sum("_n").over(wb.rangeBetween(Window.unboundedPreceding, -1)),
+            F.lit(0),
+        ),
+    ).withColumn("has_nan", F.max("_nan").over(Window.partitionBy("feature")))
+
+
 def rank_values_bucketed(measure: DataFrame, *, n_buckets: int = 64) -> DataFrame:
     """Two-phase distributed rank: identical output to :func:`rank_values`
     (pytest-asserted row-for-row), but the per-feature sort runs as
@@ -161,101 +260,79 @@ def rank_values_bucketed(measure: DataFrame, *, n_buckets: int = 64) -> DataFram
 
     This is the classic distributed-rank decomposition:
 
-    1. bucket each distinct value by its position in the feature's
-       [min, max] range (``width_bucket`` — a pure projection; equal values
-       always land in the same bucket, so tie counts stay local);
+    1. bucket each value by its position in the feature's [min, max]
+       range (``width_bucket`` — a pure projection; equal values always
+       land in the same bucket, so tie counts stay local);
     2. local cumulative counts within each (feature, bucket) window —
        parallelism = features x buckets;
     3. a tiny per-(feature, bucket) totals table (≤ features x (buckets+1)
        rows) turned into prefix offsets with a window over buckets, then
        broadcast back.
 
-    The global rank of a value = its bucket's offset + its local cumulative
-    count.  Value skew degrades bucket balance, not correctness (a fully
-    constant feature collapses to one bucket — exactly the single-window
-    cost it would have anyway).
-
-    The raw stream is read twice BY MEASUREMENT, not oversight
-    (optimization r13, VERDICT item 4 examined): materializing the
-    distinct-triple table once for all three consumers (tracked_persist
-    and localCheckpoint variants both measured) costs 1.6-2x MORE
-    end-to-end than the second scan — the value-count table is
-    O(distinct (feature, value, group) triples), which for near-unique
-    continuous features (exactly the ones routed here) approaches the
-    row count, so pinning it trades a cheap re-read for a corpus-sized
-    materialization; that trade is wrong at 100 TB too.  Instead the
-    stats branch is made as cheap as a scan can be: per-feature min/max
-    aggregates DIRECTLY on the raw measure (map-side combinable,
-    4-row output, no distinct hash aggregate — min/max over raw values
-    == min/max over distinct values, with the same NULL→NaN
-    canonicalization), so the big (feature, value, group) aggregation
-    runs exactly once and the second read shuffles nothing.
-
-    NaN rows park in bucket ``n_buckets + 1`` past every real value; their
-    ranks are NULL anyway (propagate semantics) but their counts must
-    survive for group sizes, so they stay in the table.
+    The global rank of a value = its bucket's offset + its local rank.
+    Value skew degrades bucket balance, not correctness (a fully constant
+    feature collapses to one bucket — exactly the single-window cost it
+    would have anyway).  The totals branch and the ranked rows read the
+    same (feature, _bkt) exchange; Spark's exchange reuse runs it once.
+    The MWU pipeline does not come through here: it applies the offsets to
+    per-(feature, bucket, group) sums instead (:func:`rank_sums_bucketed`).
     """
-    vc = value_counts(measure)
-    canon = F.when(F.col("value").isNull(), F.lit(float("nan"))).otherwise(
-        F.col("value").cast("double")
-    )
-    stats = measure.groupBy("feature").agg(
-        F.min(canon).alias("_vmin"), F.max(canon).alias("_vmax")
-    )
-    vcb = (
-        vc.join(F.broadcast(stats), "feature")
-        .withColumn(
-            "_bkt",
-            F.when(F.isnan("value"), F.lit(n_buckets + 1))
-            # Spark max() treats NaN as the largest double, so a NaN-poisoned
-            # feature has _vmax = NaN and width_bucket would return NULL —
-            # which the (feature, _bkt) join would silently drop, corrupting
-            # group sizes.  Ranks are NULL for these features anyway; any
-            # deterministic non-null bucket keeps the counts intact.
-            .when(F.isnan("_vmax"), F.lit(1))
-            .when(F.col("_vmin") == F.col("_vmax"), F.lit(1))
-            .otherwise(
-                F.least(
-                    F.lit(n_buckets),
-                    F.width_bucket("value", "_vmin", "_vmax", F.lit(n_buckets)),
-                )
-            ),
+    local = _bucketed_local_ranks(measure, n_buckets)
+    offs = _with_bucket_offsets(
+        local.groupBy("feature", "_bkt").agg(
+            F.sum("c").alias("_n"), F.max(F.isnan("value")).alias("_nan")
         )
-        .drop("_vmin", "_vmax")
-        .transform(tracked_persist)
-    )
-    # tiny totals table: per-bucket row counts + per-bucket NaN flags
-    btot = vcb.groupBy("feature", "_bkt").agg(
-        F.sum("c").alias("_bc"), F.max(F.isnan("value")).alias("_bnan")
-    )
-    wb = Window.partitionBy("feature").orderBy("_bkt")
-    offs = btot.select(
+    ).select(F.col("feature").alias("_f"), F.col("_bkt").alias("_b"), "_off", "has_nan")
+    on = local["feature"].eqNullSafe(offs["_f"]) & (local["_bkt"] == offs["_b"])
+    return local.join(F.broadcast(offs), on).select(
         "feature",
-        "_bkt",
-        F.coalesce(
-            F.sum("_bc").over(wb.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("_off"),
-        F.max("_bnan").over(Window.partitionBy("feature")).alias("has_nan"),
+        "value",
+        "group",
+        "c",
+        "t",
+        F.when(F.col("has_nan"), F.lit(None).cast("double"))
+        .otherwise(F.col("_off") + F.col("_loc"))
+        .alias("avg_rank"),
+        "has_nan",
     )
-    wloc = Window.partitionBy("feature", "_bkt").orderBy("value")
-    t = F.sum("c").over(wloc.rangeBetween(Window.currentRow, Window.currentRow))
-    cum_loc = F.sum("c").over(
-        wloc.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+
+
+def rank_sums_bucketed(measure: DataFrame, *, n_buckets: int = 64) -> DataFrame:
+    """``compute_in_group_ranksum(rank_values_bucketed(measure))`` — same
+    columns (feature, group, n1, rank_sum, val_sum, tie_part, has_nan) and
+    the same exact rank sums — without a value-level offsets join.
+
+    The local-rank rows aggregate straight to a (feature, _bkt, group)
+    table on the partitioning they already have; the bucket offsets are
+    applied to that table: a group's rank sum in a bucket is
+    ``Σ c·_loc + _off·n``.  Every term is a half-integer, so the sums are
+    exact in any order and U stays bit-exact.  ``val_sum`` is a float sum
+    in another order than the windowed plan's (LFC agrees to rounding).
+    """
+    local = _bucketed_local_ranks(measure, n_buckets)
+    c = F.col("c").cast("double")
+    t = F.col("t").cast("double")
+    per_bucket = local.groupBy("feature", "_bkt", "group").agg(
+        F.sum("c").alias("_n"),
+        F.sum(c * F.col("_loc")).alias("_loc_sum"),
+        F.sum(c * F.col("value")).alias("val_sum"),
+        F.sum(c * (t * t - F.lit(1.0))).alias("tie_part"),
+        F.max(F.isnan("value")).alias("_nan"),
     )
-    ranked = (
-        vcb.withColumn("t", t)
-        .withColumn("_cum_loc", cum_loc)
-        .join(F.broadcast(offs), ["feature", "_bkt"])
-        .withColumn(
-            "avg_rank",
-            F.when(F.col("has_nan"), F.lit(None).cast("double")).otherwise(
-                F.col("_off") + F.col("_cum_loc") - (F.col("t") - F.lit(1)) / F.lit(2.0)
-            ),
+    return (
+        _with_bucket_offsets(per_bucket)
+        .groupBy("feature", "group")
+        .agg(
+            F.sum("_n").alias("n1"),
+            F.sum(
+                F.when(
+                    ~F.col("has_nan"), F.col("_loc_sum") + F.col("_off") * F.col("_n")
+                )
+            ).alias("rank_sum"),
+            F.sum("val_sum").alias("val_sum"),
+            F.sum("tie_part").alias("tie_part"),
+            F.max("has_nan").alias("has_nan"),
         )
-    )
-    return ranked.select(
-        "feature", "value", "group", "c", "t", "avg_rank", "has_nan"
     )
 
 
@@ -276,12 +353,7 @@ def rank_data(measure: DataFrame, *, id_cols: tuple[str, ...] = ("obs_id",)) -> 
     """
     _check_measure(measure)
     rv = rank_values(measure).select("feature", "value", "group", "t", "avg_rank")
-    src = measure.withColumn(
-        "value",
-        F.when(F.col("value").isNull(), F.lit(float("nan"))).otherwise(
-            F.col("value").cast("double")
-        ),
-    )
+    src = measure.withColumn("value", _canonical_value())
     return src.join(rv, on=["feature", "value", "group"], how="left").select(
         *id_cols,
         "group",

@@ -14,8 +14,25 @@ lazy Catalyst plan with a strictly linear dataflow:
       -> pandas_udf p-value                           [tiny, Arrow]
       -> BH window per group / top-k window per group [tiny]
 
+With ``n_value_buckets=k`` (few features with near-unique values) the rank
+runs as (feature, value-bucket) units and value-level rows still cross ONE
+shuffle:
+
+    scan -> groupBy(feature) min/max                  [shuffle, map-side combine
+                                                       -> broadcast, tiny]
+    scan -> broadcast join + _bkt projection          [no shuffle]
+      -> repartition(feature, _bkt)                   [shuffle 1, raw rows]
+      -> groupBy(feature, _bkt, value, group).count() [same partitioning]
+      -> Window partitionBy(feature, _bkt) order by value  [same partitioning]
+      -> groupBy(feature, _bkt, group) local rank sums [same partitioning -> tiny]
+      -> bucket offsets: Window partitionBy(feature) order by _bkt
+                                                      [shuffle 2, tiny]
+      -> groupBy(feature, group) sums + feature totals [same partitioning]
+      -> scalar math, p-value, BH / top-k as above    [tiny]
+
 Because group sizes, rank sums, tie terms AND group means all derive from the
-single value-level aggregate, the raw data is scanned exactly once — the
+single value-level aggregate, the raw data is scanned exactly once (the
+bucketed plan adds the min/max scan, which shuffles a few rows) — the
 reference scans it twice (LFC re-read, SURVEY.md barriers 7-9) and the ranked
 tensor twice more (zarr rechunk round-trip).
 
@@ -24,7 +41,8 @@ Scale notes (100 TB, 1000 executors): shuffles 1-3 carry value-level rows
 by orders of magnitude; the worst case (all-distinct values) equals what any
 exact rank must move.  Nothing driver-side ever holds more than the
 (n_features x n_groups) result — and even that stays a DataFrame until the
-caller sinks it.
+caller sinks it.  The bucketed plan's shuffle 1 moves raw rows with no
+map-side combine, so it suits near-unique values, not heavy ties.
 """
 
 from __future__ import annotations
@@ -32,12 +50,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from dask_mwu_spark.operators.logfoldchange import compute_logfoldchange
-from dask_mwu_spark.operators.mwu import (
-    compute_in_group_ranksum,
-    compute_tie_term,
-    mann_whitney_u,
+from dask_mwu_spark.operators.mwu import compute_in_group_ranksum, mann_whitney_u
+from dask_mwu_spark.operators.ranking import (
+    rank_sums_bucketed,
+    rank_values,
+    resolve_value_buckets,
 )
-from dask_mwu_spark.operators.ranking import rank_values
 from dask_mwu_spark.operators.topk import create_df
 
 
@@ -48,14 +66,19 @@ def feature_group_stats(
     z, p_value, p_adjusted — everything except LFC.
 
     ``n_value_buckets``: opt into the two-phase distributed rank
-    (ranking.rank_values_bucketed) when features are few and continuous —
+    (ranking.rank_sums_bucketed) when features are few and continuous —
     the per-feature window is a single task otherwise, fine to ~1e7
-    distinct values per feature, 8x slower than bucketed at 2x20M
-    (tools/scale_probe_rank.py; identical output either way).  Pass
+    distinct values per feature (identical statistics either way).
+    tools/scale_probe_rank.py at 2x4M rows, 20% of them tied, 4 cores:
+    windowed 19 s, bucketed 17 s.  The bucketed shuffle moves raw rows,
+    so ties packed into one bucket reach it uncombined.  Pass
     ``"auto"`` to let one cheap approx_count_distinct aggregate pick the
     plan from the data (ranking.AUTO_DISTINCT_THRESHOLD)."""
-    rv = rank_values(measure, n_value_buckets=n_value_buckets)
-    fg = compute_in_group_ranksum(rv)
+    n_buckets = resolve_value_buckets(measure, n_value_buckets)
+    if n_buckets is None:
+        fg = compute_in_group_ranksum(rank_values(measure))
+    else:
+        fg = rank_sums_bucketed(measure, n_buckets=n_buckets)
     # feature totals come as window aggregates inside mann_whitney_u — a
     # compute_tie_term + join would make Catalyst duplicate the whole
     # upstream tree (two scans, two rank shuffles; no cross-branch CSE)

@@ -227,3 +227,107 @@ def test_auto_routes_by_measured_cardinality(spark, sf_dir, monkeypatch):
         .collect()
     )
     assert [tuple(r) for r in rows_auto] == [tuple(r) for r in rows_explicit]
+
+
+@pytest.mark.parametrize("bad", [0, -3, True, "fast"])
+def test_n_value_buckets_rejects_bad_values(spark, bad):
+    """Only None, "auto" or an int >= 1 are accepted: 0 and -3 must not
+    collapse every feature to one bucket, a bool is not an int here, and
+    an unknown string must not fail deep inside the plan."""
+    from dask_mwu_spark.errors import InvalidDimensionError
+    from dask_mwu_spark.plans.pipeline import feature_group_stats
+
+    m = spark.createDataFrame(
+        [("f", "a", 1.0), ("f", "b", 2.0)], "feature string, group string, value double"
+    )
+    for call in (rank_values, feature_group_stats):
+        with pytest.raises(InvalidDimensionError, match="n_value_buckets"):
+            call(m, n_value_buckets=bad)
+
+
+def _edge_measures(spark):
+    """Ties, a NaN-poisoned feature, +-Inf values, a constant feature,
+    near-unique values and a NULL feature name in one measure; a single
+    feature; an empty one."""
+    rng = np.random.default_rng(7)
+    groups = ["a", "b", "c"]
+    rows = []
+    for i in range(60):
+        g = groups[i % 3]
+        rows.append(("ties", g, float(rng.integers(0, 4))))
+        rows.append(("const", g, 3.0))
+        rows.append(("cont", g, float(rng.lognormal())))
+        rows.append(("nan", g, None if i == 17 else float(i % 7)))
+        inf = {5: float("inf"), 11: float("-inf"), 23: float("inf")}
+        rows.append(("inf", g, inf.get(i, float(rng.normal()))))
+        rows.append((None, g, float(i % 11)))
+    schema = "feature string, group string, value double"
+    multi = spark.createDataFrame(rows, schema)
+    single = spark.createDataFrame([r for r in rows if r[0] == "cont"], schema)
+    return {"multi": multi, "single": single, "empty": spark.createDataFrame([], schema)}
+
+
+@pytest.mark.parametrize("k", [1, 4, 64])
+def test_bucketed_pipeline_equals_windowed(spark, k):
+    """feature_group_stats with the bucketed rank returns the windowed
+    plan's statistics: every rank-derived column bit-for-bit, LFC at
+    tests/test_lfc.py's tolerance (group means are float sums whose order
+    differs between the plans)."""
+    import math
+
+    from dask_mwu_spark.operators.logfoldchange import compute_logfoldchange
+    from dask_mwu_spark.plans.pipeline import feature_group_stats
+
+    exact = ("n1", "n2", "rank_sum", "tie_term", "u_stat", "z", "p_value", "p_adjusted")
+
+    def rows(m, **kw):
+        df = compute_logfoldchange(feature_group_stats(m, **kw))
+        return df.orderBy("feature", "group").collect()
+
+    def same(a, b):
+        return a == b or (isinstance(a, float) and math.isnan(a) and math.isnan(b))
+
+    for name, m in _edge_measures(spark).items():
+        want, got = rows(m), rows(m, n_value_buckets=k)
+        assert len(want) == len(got) and (name == "empty" or want), name
+        for w, g in zip(want, got):
+            assert (w.feature, w.group) == (g.feature, g.group)
+            for col in exact:
+                assert same(w[col], g[col]), (name, w.feature, w.group, col, w[col], g[col])
+            np.testing.assert_allclose(  # None (no rest group) compares as NaN
+                np.array(g.logfoldchange, dtype=float),
+                np.array(w.logfoldchange, dtype=float),
+                rtol=1e-9,
+                atol=1e-12,
+                err_msg=f"{name} {w.feature} {w.group}",
+            )
+        if name == "multi":
+            ranks = [
+                rank_values(m, **kw).orderBy("feature", "value", "group").collect()
+                for kw in ({}, {"n_value_buckets": k})
+            ]
+            assert len(ranks[0]) == len(ranks[1]) > 0
+            for w, g in zip(*ranks):
+                assert all(same(a, b) for a, b in zip(w, g)), (w, g)
+            nan_rows = [g for g in got if g.feature == "nan"]
+            assert nan_rows and all(g.rank_sum is None and g.n1 == 20 for g in nan_rows)
+
+
+def test_bucketed_pipeline_plan_shape(spark, sf_dir):
+    """The bucketed feature_group_stats moves value-level rows through
+    ONE exchange, hashpartitioning(feature, _bkt); everything after it is
+    tiny, and nothing is cached."""
+    import re
+
+    from dask_mwu_spark.plans.pipeline import feature_group_stats
+    from dask_mwu_spark.sources.loaders import obs_measure_from_lineitem
+
+    m = obs_measure_from_lineitem(spark, sf_dir)
+    df = feature_group_stats(m, n_value_buckets=16)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    exchanges = re.findall(r"(?<!Broadcast)Exchange (\w+)\(([^)]*)\)", plan)
+    shuffles = [args for kind, args in exchanges if kind == "hashpartitioning"]
+    bucket = [a for a in shuffles if re.fullmatch(r"feature#\d+, _bkt#\d+L?, \d+", a)]
+    assert len(bucket) == 1, (exchanges, plan)
+    assert len(exchanges) <= 4 and plan.count("BroadcastExchange") <= 1, plan

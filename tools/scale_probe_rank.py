@@ -6,7 +6,9 @@ Synthetic measure table: n_features features x n_obs observations each,
 values mostly-continuous (80% unique doubles, 20% tied) so the value-level
 compression does NOT save us — this is the worst case the flagship's
 docstring acknowledges ("degrades gracefully to the same work the raw
-window would do"), and exactly the case rank_values_bucketed exists for.
+window would do"), and exactly the case the bucketed rank exists for.
+Each arm times ``feature_group_stats``, the MWU statistics the pipeline
+computes, so the bucketed arms run the path the registered queries run.
 
 Run: python tools/scale_probe_rank.py [n_obs_per_feature] [n_features]
 """
@@ -21,8 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from dask_mwu_spark.operators.mwu import compute_in_group_ranksum, mann_whitney_u
-from dask_mwu_spark.operators.ranking import rank_values
+from dask_mwu_spark.plans.pipeline import feature_group_stats
 from dask_mwu_spark.session import get_spark
 
 
@@ -52,7 +53,7 @@ def main() -> None:
     def run(label, **kw):
         for i in range(2):  # second run = steady state
             t0 = time.time()
-            mann_whitney_u(compute_in_group_ranksum(rank_values(m, **kw))).collect()
+            feature_group_stats(m, **kw).collect()
             dt = time.time() - t0
         print(f"{label}: {dt:.1f}s  ({n_features} features x {n_obs:,} obs)")
 
